@@ -22,6 +22,12 @@ from ..functions.metrics import bed_occ_pct_api, icu_occ_pct
 from ..operators.asof import with_prev_calendar_day
 
 
+def _sort_small(df: DataFrame, col: str) -> DataFrame:
+    """Sort a result bounded by the dimension or the date count inside
+    one partition: no sampling job and no range exchange."""
+    return df.coalesce(1).sortWithinPartitions(col)
+
+
 def latest_date(df: DataFrame, date_col: str = "date"):
     """Default date = max(date) (main.py:148-152,205-209) — op-agg-max-date."""
     return df.agg(F.max(date_col).alias("max_date"))
@@ -73,7 +79,7 @@ def capacity_latest(
         F.round(icu_occ_pct(F.col("icu_occupied"), F.col("icu_beds")), 4).alias(
             "icu_occ_pct"
         ),
-    ).orderBy("region")
+    ).transform(_sort_small, "region")  # ≤ one row per region
 
 
 def metrics_latest(
@@ -92,7 +98,7 @@ def metrics_latest(
             "inner",
         )
         .select("date", "region", "bed_occ_pct", "icu_occ_pct", "strain_index")
-        .orderBy("region")
+        .transform(_sort_small, "region")  # ≤ one row per region
     )
 
 
@@ -108,8 +114,13 @@ def metrics_compare(
     """
     if date is None:
         date = latest_date(metrics).collect()[0][0]
+    # the lag reaches back one calendar day at most, so the window (and
+    # the scan, by partition pruning) needs only the date and the day
+    # before: at most two rows per region
+    day = F.lit(date).cast("date")
+    recent = metrics.filter(F.col("date").between(F.date_sub(day, 1), day))
     lagged = with_prev_calendar_day(
-        metrics, ["region_id"], "date", "strain_index", "prev_strain_index"
+        recent, ["region_id"], "date", "strain_index", "prev_strain_index"
     )
     return (
         lagged.filter(F.col("date") == F.lit(date))
@@ -127,7 +138,7 @@ def metrics_compare(
             "prev_strain_index",
             (F.col("strain_index") - F.col("prev_strain_index")).alias("delta"),
         )
-        .orderBy("region")
+        .transform(_sort_small, "region")  # ≤ one row per region
     )
 
 
@@ -136,7 +147,8 @@ def available_dates(metrics: DataFrame, full: bool = False) -> DataFrame:
     (main.py:298-310) — op-agg-minmax-countd. With ``full``, the sorted
     distinct date list (op-distinct-sorted, main.py:319-328)."""
     if full:
-        return metrics.select("date").distinct().orderBy("date")
+        # ≤ one row per date
+        return metrics.select("date").distinct().transform(_sort_small, "date")
     return metrics.agg(
         F.min("date").alias("min_date"),
         F.max("date").alias("max_date"),
@@ -144,22 +156,26 @@ def available_dates(metrics: DataFrame, full: bool = False) -> DataFrame:
     )
 
 
-def coverage(metrics: DataFrame, min_rows: int = 1) -> DataFrame:
-    """GET /metrics/coverage — per-date row counts with HAVING
-    (main.py:339-349) — op-groupby-having."""
+def _coverage_rows(metrics: DataFrame, min_rows: int) -> DataFrame:
     return (
         metrics.groupBy("date")
         .agg(F.count("id").alias("rows"))
         .filter(F.col("rows") >= min_rows)
-        .orderBy("date")
     )
+
+
+def coverage(metrics: DataFrame, min_rows: int = 1) -> DataFrame:
+    """GET /metrics/coverage — per-date row counts with HAVING
+    (main.py:339-349) — op-groupby-having."""
+    # ≤ one row per date
+    return _coverage_rows(metrics, min_rows).transform(_sort_small, "date")
 
 
 def coverage_best_date(metrics: DataFrame, min_rows: int = 1) -> DataFrame:
     """best_date = most recent qualifying date + its count
     (main.py:357-366), computed in-engine instead of client-side —
     op-argmax-date."""
-    return coverage(metrics, min_rows).orderBy(F.desc("date")).limit(1)
+    return _coverage_rows(metrics, min_rows).orderBy(F.desc("date")).limit(1)
 
 
 def dashboard_kpis(metrics_for_date: DataFrame) -> DataFrame:

@@ -16,7 +16,7 @@ import os
 from dataclasses import dataclass
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.metrics import bed_occ_pct_etl, icu_occ_pct, strain_index
@@ -89,7 +89,11 @@ def compute_metrics(
         capacity = bronze.read()
         if dates is not None:
             capacity = capacity.filter(F.col("date").isin(list(dates)))
-        metrics = metrics_from_capacity(capacity, run_id)
+        # counted by the upsert's own evaluation of the batch
+        counted = Observation()
+        metrics = metrics_from_capacity(capacity, run_id).observe(
+            counted, F.count(F.lit(1)).alias("n")
+        )
         silver = LakeTable(
             spark,
             os.path.join(lake_dir, "metrics_daily"),
@@ -98,7 +102,7 @@ def compute_metrics(
             version_col="created_at",
         )
         silver.upsert(metrics)
-        n = silver.read().count() if dates is None else metrics.count()
+        n = silver.read().count() if dates is None else counted.get["n"]
         append_run_log(
             spark,
             runs_path,

@@ -3,8 +3,8 @@
 
 One declarative plan replaces the reference's row-at-a-time loop:
 
-    scan csv → project/rename → to_date → reason column →
-    accepted/rejected split → region get-or-create (left_anti + union) →
+    scan csv → project/rename → to_date → reason column (cached) →
+    accepted/rejected split → region get-or-create (new names only) →
     natural-key upsert → rejects CSV + run-log rows
 
 Deliberate deviations from the reference, documented:
@@ -12,20 +12,23 @@ Deliberate deviations from the reference, documented:
   "date is required" instead of failing the whole batch
   (ingest_capacity.py:15-20 raises). Batch-fail on malformed data is an
   anti-pattern at scale.
-- Region get-or-create is one distinct + left_anti join + append
-  (SURVEY.md §2.3 op-join-lookup-dim) rather than N sequential SQL
-  probes (ingest_capacity.py:158-163).
+- Region get-or-create is one set difference against the dimension's
+  names, rewriting the dimension only when a name is new (SURVEY.md §2.3
+  op-join-lookup-dim), rather than N sequential SQL probes
+  (ingest_capacity.py:158-163).
 """
 
 from __future__ import annotations
 
 import os
+import uuid
+from collections.abc import Iterable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.validate import capacity_reject_rules, split_valid_invalid
+from ..operators.validate import capacity_reject_rules, reject_reason_column
 from ..sources.csv_source import read_hhs_csv
 from ..sources.sinks import (
     append_run_log,
@@ -46,10 +49,17 @@ class IngestResult:
     rejects_path: str | None
 
 
-def parse_and_validate(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Canonical-rename CSV → (accepted, rejected).
+REASON = "_reject_reason"
 
-    ``date`` is parsed with ``to_date`` (NULL on bad input); validation
+# the literal type of newly created dimension rows
+_NEW_REGIONS = "array<struct<region_id:string,name:string>>"
+
+
+def parse_with_reason(raw: DataFrame) -> DataFrame:
+    """Canonical-rename CSV → the same rows with ``date`` parsed and a
+    ``_reject_reason`` column, NULL for an accepted row.
+
+    ``date`` is parsed with ``try_to_date`` (NULL on bad input); validation
     rules then run in the reference's first-match-wins order
     (ingest_capacity.py:29-57).
     """
@@ -64,41 +74,49 @@ def parse_and_validate(raw: DataFrame) -> tuple[DataFrame, DataFrame]:
         icu_beds=F.col("icu_beds"),
         icu_occupied=F.col("icu_occupied"),
     )
-    return split_valid_invalid(parsed, rules)
+    return parsed.withColumn(REASON, reject_reason_column(rules))
 
 
 def get_or_create_regions(
-    spark: SparkSession, accepted: DataFrame, regions_table: LakeTable
+    spark: SparkSession, names: Iterable[str], regions_table: LakeTable
 ) -> DataFrame:
-    """Dimension get-or-create as a set operation (op-join-lookup-dim).
+    """Dimension get-or-create as a set operation (op-join-lookup-dim)
+    over a batch's distinct region ``names``.
 
-    New names = incoming distinct left_anti existing; they get fresh
-    UUIDs and are appended. Returns the refreshed dimension. The
-    distinct name set is tiny (≤ #regions), so downstream joins
-    broadcast it.
+    A batch whose names are all known costs one scan of the dimension's
+    names and writes nothing. New names get fresh UUIDs, generated once
+    on the driver, and the dimension is rewritten with them appended.
+    Returns the dimension. The name set is tiny (≤ #regions), so
+    downstream joins broadcast it.
     """
-    incoming_names = accepted.select(F.col("region").alias("name")).distinct()
-    if regions_table.exists():
-        existing = regions_table.read()
-        new_names = incoming_names.join(existing.select("name"), "name", "left_anti")
-    else:
-        existing = None
-        new_names = incoming_names
-    new_regions = new_names.select(
-        F.expr("uuid()").alias("region_id"),
-        F.col("name"),
+    existing = regions_table.read() if regions_table.exists() else None
+    new_names = set(names)
+    if existing is not None:
+        new_names -= {r[0] for r in existing.select("name").collect()}
+        if not new_names:
+            return existing
+    new_regions = spark.range(0, 1, 1, 1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(str(uuid.uuid4())), F.lit(n))
+                    for n in sorted(new_names)
+                ]
+            ).cast(_NEW_REGIONS)
+        )
+    ).select(
+        "region_id",
+        "name",
         F.lit(None).cast("long").alias("population"),
         F.current_timestamp().alias("created_at"),
     )
     if existing is None:
         dim = new_regions
     else:
-        dim = existing.unionByName(new_regions)
-    # Dimension append must be materialized before re-reading; it is a
-    # small table so a localCheckpoint is cheap.
-    dim = dim.localCheckpoint(eager=True)
-    dim.write.mode("overwrite").parquet(regions_table.path)
-    return regions_table.spark.read.parquet(regions_table.path)
+        # materialized before the rewrite deletes the files it reads
+        dim = existing.unionByName(new_regions).localCheckpoint(eager=True)
+    regions_table.replace(dim)
+    return regions_table.read()
 
 
 def ingest_capacity_csv(
@@ -117,13 +135,19 @@ def ingest_capacity_csv(
         runs_path,
         run_log_row(run_id, source, "running", started, notes=f"Input file: {input_path}"),
     )
+    parsed = None
     try:
-        raw = read_hhs_csv(spark, input_path)
-        accepted, rejected = parse_and_validate(raw)
-        # One pass over the input serves both branches and the counters.
-        accepted = accepted.cache()
-        rejected = rejected.cache()
-        n_acc, n_rej = accepted.count(), rejected.count()
+        # One cached parse serves both branches; one aggregate over it
+        # yields both counters and the accepted region names.
+        parsed = parse_with_reason(read_hhs_csv(spark, input_path)).cache()
+        reason = F.col(REASON)
+        n_acc, n_rej, names = parsed.agg(
+            F.count(F.when(reason.isNull(), 1)),
+            F.count(reason),
+            F.collect_set(F.when(reason.isNull(), F.col("region"))),
+        ).collect()[0]
+        accepted = parsed.filter(reason.isNull()).drop(REASON)
+        rejected = parsed.filter(reason.isNotNull())
 
         rejects_path = None
         if n_rej:
@@ -138,7 +162,7 @@ def ingest_capacity_csv(
             partition_col="name",
             version_col=None,
         )
-        regions = get_or_create_regions(spark, accepted, regions_table)
+        regions = get_or_create_regions(spark, names, regions_table)
 
         capacity = (
             accepted.join(F.broadcast(regions.select("region_id", "name")),
@@ -173,8 +197,6 @@ def ingest_capacity_csv(
                 notes=f"Input file: {input_path}",
             ),
         )
-        accepted.unpersist()
-        rejected.unpersist()
         return IngestResult(run_id, n_acc + n_rej, n_acc, n_rej, rejects_path)
     except Exception as e:  # run-log failure path (ingest_capacity.py:213-224)
         append_run_log(
@@ -183,3 +205,6 @@ def ingest_capacity_csv(
             run_log_row(run_id, source, "failed", started, utcnow(), notes=f"Error: {e}"),
         )
         raise
+    finally:
+        if parsed is not None:
+            parsed.unpersist()

@@ -15,16 +15,53 @@ environment this would be ``MERGE INTO``; the portable mechanism here:
    so Spark's read/write-same-path check doesn't trip; the working set
    is bounded by the batch's touched partitions, not table size — this
    is what keeps a 100 TB table upsertable by a 1 GB micro-batch.
+
+Schema recorded at commit: every write records the schema of the table's
+data files (partition columns excluded: they live in directory names) as
+JSON in ``_lake_schema.json`` at the table root, through the Hadoop
+``FileSystem`` API. ``read()`` hands that schema to the reader, so a read
+lists files but launches no Spark job; without it Spark runs a footer job
+on every read to infer the schema. Commit order keeps the file never
+narrower than the data files: a partition overwrite or an append widens
+it *before* data lands (a reader in between sees the new column as
+NULL, exactly as untouched partitions show it afterwards); a
+full-directory rewrite (``replace``) deletes the old file with the
+directory and writes the new one *after* the data. A column whose type
+changes removes the file. A table without the file — written before
+schema recording, or caught between a rewrite and its schema write —
+reads with ``mergeSchema`` as before, and keeps doing so until a full
+rewrite records one. Hidden names (leading ``_``) keep the file out of
+Spark's scans and out of ``partition_file_counts``/``compact``/``vacuum``.
+
+Lake tables are written only through ``LakeTable`` (``overwrite``,
+``upsert``, ``compact``, ``replace``, ``append``) and
+``sources.sinks.append_run_log``, so every writer keeps the file in step.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.upsert import dedup_last_writer, upsert_last_writer_wins
+
+SCHEMA_FILE = "_lake_schema.json"
+
+
+def _widen(recorded: StructType, incoming: StructType) -> StructType | None:
+    """``recorded`` plus the fields only ``incoming`` has, appended in
+    order (where ``unionByName(allowMissingColumns=True)`` puts them);
+    None when a field both carry changed type."""
+    have = {f.name: f.dataType for f in recorded.fields}
+    if any(have.get(f.name, f.dataType) != f.dataType for f in incoming.fields):
+        return None
+    return StructType(
+        recorded.fields + [f for f in incoming.fields if f.name not in have]
+    )
 
 
 class LakeTable:
@@ -89,19 +126,79 @@ class LakeTable:
             for st in fs.listStatus(root)
         )
 
+    def _schema_file(self):
+        fs, root = self._hadoop_fs()
+        return fs, self.spark._jvm.org.apache.hadoop.fs.Path(root, SCHEMA_FILE)
+
+    def recorded_schema(self) -> StructType | None:
+        """The data-file schema recorded at the last commit, or None for
+        a table without one."""
+        fs, path = self._schema_file()
+        if not fs.exists(path):
+            return None
+        stream = fs.open(path)
+        try:
+            text = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
+                stream, "UTF-8"
+            )
+        finally:
+            stream.close()
+        return StructType.fromJson(json.loads(text))
+
+    def _record_schema(self, schema: StructType | None) -> None:
+        """Replace the schema file (remove it for None). Written under a
+        temporary name and renamed, so a reader sees the old file, the
+        new one, or none (and then falls back to ``mergeSchema``) —
+        never a partial one."""
+        fs, path = self._schema_file()
+        if schema is None:
+            fs.delete(path, False)
+            return
+        tmp = self.spark._jvm.org.apache.hadoop.fs.Path(
+            path.getParent(), f"{SCHEMA_FILE}.tmp"
+        )
+        out = fs.create(tmp, True)
+        try:
+            out.write(bytearray(schema.json().encode()))
+        finally:
+            out.close()
+        # HDFS-style rename does not replace an existing target
+        fs.delete(path, False)
+        fs.rename(tmp, path)
+
+    def _widen_recorded(self, data_schema: StructType) -> None:
+        """Before data files of ``data_schema`` land: a new table records
+        it; a recorded one is widened to cover it; a table without the
+        file is left to the ``mergeSchema`` read."""
+        if not self.exists():
+            self._record_schema(data_schema)
+            return
+        recorded = self.recorded_schema()
+        if recorded is not None:
+            widened = _widen(recorded, data_schema)
+            if widened != recorded:
+                self._record_schema(widened)
+
     def read(self) -> DataFrame:
+        reader = self.spark.read.format(self.data_format)
+        schema = self.recorded_schema()
+        if schema is not None:
+            # partition columns are not in the file: Spark infers them
+            # from directory names as before, after the data columns
+            return reader.schema(schema).load(self.path)
         # mergeSchema: dynamic partition overwrite only rewrites touched
         # partitions, so after a column is added the untouched
         # partitions still hold the old physical schema — the merged
         # read surfaces the union schema with NULLs for the missing
         # column (the lake-format ALTER TABLE ADD COLUMN behavior)
-        return (
-            self.spark.read.option("mergeSchema", "true")
-            .format(self.data_format)
-            .load(self.path)
-        )
+        return reader.option("mergeSchema", "true").load(self.path)
 
     def overwrite(self, df: DataFrame) -> None:
+        self._widen_recorded(
+            StructType(
+                [f for f in df.schema.fields if f.name != self.partition_col]
+            )
+        )
         if self.sort_cols:
             df = df.sortWithinPartitions(self.partition_col, *self.sort_cols)
         (
@@ -111,6 +208,18 @@ class LakeTable:
             .format(self.data_format)
             .save(self.path)
         )
+
+    def replace(self, df: DataFrame) -> None:
+        """Rewrite the whole table as unpartitioned files (a small
+        dimension). The overwrite deletes the directory, old schema file
+        included, so the schema is recorded after the data."""
+        df.write.mode("overwrite").format(self.data_format).save(self.path)
+        self._record_schema(df.schema)
+
+    def append(self, df: DataFrame) -> None:
+        """Append unpartitioned files (the run log)."""
+        self._widen_recorded(df.schema)
+        df.write.mode("append").format(self.data_format).save(self.path)
 
     def upsert(self, incoming: DataFrame) -> None:
         """Idempotent natural-key upsert; incoming wins conflicts."""
@@ -125,15 +234,17 @@ class LakeTable:
             self.overwrite(incoming)
             return
 
-        # Partition-pruned read of only the touched partitions. The
-        # distinct partition values of a micro-batch are small by
-        # construction (dates), so collecting them for an isin-pushdown
-        # is driver-cheap and buys partition pruning on the big side.
-        touched = [
-            r[0]
-            for r in incoming.select(self.partition_col).distinct().collect()
-        ]
-        existing_slice = self.read().filter(F.col(self.partition_col).isin(touched))
+        # Evaluate the batch once: the checkpoint that pins it also
+        # observes its distinct partition values, which buy partition
+        # pruning on the big side (a micro-batch touches few dates, so
+        # the set is driver-cheap).
+        touched = Observation()
+        incoming = incoming.observe(
+            touched, F.collect_set(self.partition_col).alias("values")
+        ).localCheckpoint(eager=True)
+        existing_slice = self.read().filter(
+            F.col(self.partition_col).isin(touched.get["values"])
+        )
         merged = upsert_last_writer_wins(
             existing_slice,
             incoming,

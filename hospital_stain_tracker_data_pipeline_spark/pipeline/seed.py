@@ -48,7 +48,10 @@ def seed_lake(spark: SparkSession, lake_dir: str) -> str:
         dim = (
             existing.unionByName(new_row) if existing is not None else new_row
         ).localCheckpoint(eager=True)
-        dim.write.mode("overwrite").parquet(regions_path)
+        LakeTable(
+            spark, regions_path, keys=["name"], partition_col="name",
+            version_col=None,
+        ).replace(dim)
         region_id = dim.filter(F.col("name") == SEED_REGION).collect()[0].region_id
 
     # 2. run-log row (seed.py:27-33)

@@ -85,7 +85,7 @@ def get_spark(
 
 def local_rows_df(spark: SparkSession, rows, schema):
     """Driver-local model/metadata rows (fitted centroids, codebooks,
-    run-log lines — at most a few thousand tuples) as a
+    streaming ledger lines — at most a few thousand tuples) as a
     SINGLE-partition DataFrame, cheaply.
 
     The idiomatic ``createDataFrame(list) … .coalesce(1).write`` is

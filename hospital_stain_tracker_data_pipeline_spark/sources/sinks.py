@@ -9,6 +9,7 @@ import uuid
 from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import functions as F
 
 from ..schemas import PIPELINE_RUNS_SCHEMA
 
@@ -72,12 +73,22 @@ def run_log_row(
 def append_run_log(spark: SparkSession, path: str, row: Row) -> None:
     """Append one lineage row per job start/end — the reference's
     ``pipeline_runs`` insert/update (ingest_capacity.py:85-96,195-201).
-    Append-only on a lake; readers take the latest status per run_id."""
-    from ..session import local_rows_df
+    Append-only on a lake; readers take the latest status per run_id.
 
-    local_rows_df(spark, [row], PIPELINE_RUNS_SCHEMA).write.mode(
-        "append"
-    ).parquet(path)
+    The row is a one-partition literal projection planned in the JVM:
+    no Python worker and no pickled RDD for a single row."""
+    # imported here: the pipeline package imports this module
+    from ..pipeline.lake import LakeTable
+
+    df = spark.range(0, 1, 1, 1).select(
+        *[
+            F.lit(row[f.name]).cast(f.dataType).alias(f.name)
+            for f in PIPELINE_RUNS_SCHEMA.fields
+        ]
+    )
+    LakeTable(
+        spark, path, keys=["run_id"], partition_col="run_id", version_col=None
+    ).append(df)
 
 
 def utcnow() -> datetime:

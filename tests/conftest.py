@@ -25,10 +25,10 @@ def pytest_collection_modifyitems(config, items):
     tier pins."""
     if os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1":
         return
-    # a test named explicitly by node id must RUN, not silently
-    # deselect to a green no-op — skip the marking when the invocation
-    # targets specific tests
-    if any("::" in a for a in config.args):
+    # a test named explicitly — by node id or by its file — must RUN,
+    # not silently deselect to a green no-op: skip the marking when the
+    # invocation targets specific tests (a directory keeps the tiers)
+    if any("::" in a or a.endswith(".py") for a in config.args):
         return
     try:
         with open(_SLOW_MANIFEST) as fh:

@@ -640,43 +640,99 @@ def test_lake_table_schema_evolution_add_column(spark, tmp_path):
     """A later batch ADDs a column: the upsert must succeed, old rows
     read NULL for the new column (mergeSchema across partitions whose
     physical files predate it), and a subsequent old-producer batch
-    MISSING the column NULL-fills instead of failing."""
+    MISSING the column NULL-fills instead of failing.
+
+    Every write records the data-file schema in ``_lake_schema.json``
+    and ``read()`` uses it; the recorded read equals the merged footer
+    read, for parquet and ORC, through a plain path and a ``file://``
+    URI. ``partition_file_counts``, ``compact`` and ``vacuum`` never see
+    the file. A table without it (written before schema recording)
+    reads the merged schema."""
     import pyspark.sql.functions as F
 
-    from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import LakeTable
+    from hospital_stain_tracker_data_pipeline_spark.pipeline.lake import (
+        SCHEMA_FILE,
+        LakeTable,
+    )
 
-    path = str(tmp_path / "evolve")
-    t = LakeTable(spark, path, keys=["date", "region_id"], version_col=None)
-    v1 = spark.createDataFrame(
+    def batch(rows, ddl):
+        return spark.createDataFrame(rows, ddl).withColumn(
+            "date", F.to_date("date")
+        )
+
+    v1 = batch(
         [("2026-03-01", 1, 10.0), ("2026-03-02", 2, 20.0)],
         "date string, region_id int, v double",
-    ).withColumn("date", F.to_date("date"))
-    t.upsert(v1)
+    )
     # batch 2 adds `flag` and touches only 03-02 (03-01's file keeps
     # the old physical schema on disk)
-    v2 = spark.createDataFrame(
+    v2 = batch(
         [("2026-03-02", 2, 21.0, "new")],
         "date string, region_id int, v double, flag string",
-    ).withColumn("date", F.to_date("date"))
-    t.upsert(v2)
-    got = {
-        (str(r["date"]), r["region_id"]): (r["v"], r["flag"])
-        for r in t.read().collect()
-    }
-    assert got[("2026-03-01", 1)] == (10.0, None)
-    assert got[("2026-03-02", 2)] == (21.0, "new")
+    )
     # batch 3 from an old producer without `flag`: merges, NULL flag
-    v3 = spark.createDataFrame(
-        [("2026-03-01", 1, 11.0)], "date string, region_id int, v double"
-    ).withColumn("date", F.to_date("date"))
-    t.upsert(v3)
-    got = {
-        (str(r["date"]), r["region_id"]): (r["v"], r["flag"])
-        for r in t.read().collect()
-    }
-    assert got[("2026-03-01", 1)] == (11.0, None)
-    assert got[("2026-03-02", 2)] == (21.0, "new")
-    assert len(got) == 2
+    v3 = batch([("2026-03-01", 1, 11.0)], "date string, region_id int, v double")
+
+    def rows(t):
+        return {
+            (str(r["date"]), r["region_id"]): (r["v"], r["flag"])
+            for r in t.read().collect()
+        }
+
+    def merged_schema(t):
+        return (
+            spark.read.option("mergeSchema", "true")
+            .format(t.data_format)
+            .load(t.path)
+            .schema
+        )
+
+    def evolve(t):
+        t.upsert(v1)
+        t.upsert(v2)
+        got = rows(t)
+        assert got[("2026-03-01", 1)] == (10.0, None)
+        assert got[("2026-03-02", 2)] == (21.0, "new")
+        t.upsert(v3)
+        assert rows(t) == {
+            ("2026-03-01", 1): (11.0, None),
+            ("2026-03-02", 2): (21.0, "new"),
+        }
+        assert t.read().schema == merged_schema(t)
+
+    for data_format in ("parquet", "orc"):
+        for uri in (False, True):
+            local = tmp_path / f"evolve-{data_format}-{int(uri)}"
+            t = LakeTable(
+                spark,
+                f"file://{local}" if uri else str(local),
+                keys=["date", "region_id"],
+                version_col=None,
+                data_format=data_format,
+            )
+            evolve(t)
+            assert t.recorded_schema().fieldNames() == ["region_id", "v", "flag"]
+            assert (local / SCHEMA_FILE).is_file()
+            assert not (local / f"{SCHEMA_FILE}.tmp").exists()
+            # maintenance sees partitions only, never the schema file
+            assert set(t.partition_file_counts()) == {"2026-03-01", "2026-03-02"}
+            assert set(t.compact(min_files=1)) == {"2026-03-01", "2026-03-02"}
+            assert t.vacuum(before="2026-03-02") == {"2026-03-01": 1}
+            assert t.recorded_schema() is not None
+            assert rows(t) == {("2026-03-02", 2): (21.0, "new")}
+            assert t.read().schema == merged_schema(t)
+
+    # a table without the schema file reads the merged schema, and
+    # later partition writes leave it that way
+    legacy_dir = tmp_path / "legacy"
+    legacy = LakeTable(
+        spark, str(legacy_dir), keys=["date", "region_id"], version_col=None
+    )
+    legacy.upsert(v1)
+    (legacy_dir / SCHEMA_FILE).unlink()
+    evolve(legacy)
+    assert legacy.recorded_schema() is None
+    assert [f.name for f in legacy.read().schema] == ["region_id", "v", "flag", "date"]
 
 
 def test_hll_registers_partial_agg_never_ships_items(spark, sf_dir):
