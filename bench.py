@@ -805,11 +805,14 @@ def _extras_registry():
 
         from pyspark.sql import functions as F2
 
+        from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+            compact_index,
+            load_manifest,
+            remove_from_index,
+        )
         from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
             append_ann_index,
             build_ann_index,
-            compact_ann_index,
-            remove_from_ann_index,
             search_ann_index,
         )
 
@@ -826,7 +829,7 @@ def _extras_registry():
             t1 = _t.perf_counter()
             report = append_ann_index(spark, f"{d}/idx", delta)
             t2 = _t.perf_counter()
-            rm = remove_from_ann_index(
+            rm = remove_from_index(
                 spark, f"{d}/idx", emb.filter(F2.col("vec_id") % 7 == 0)
             )
             t3 = _t.perf_counter()
@@ -835,7 +838,7 @@ def _extras_registry():
             )
             search_ann_index(spark, f"{d}/idx", q, k=10, nprobe=4).count()
             t4 = _t.perf_counter()
-            crep = compact_ann_index(spark, f"{d}/idx", min_ratio=0.1)
+            crep = compact_index(spark, f"{d}/idx", min_ratio=0.1)
             t5 = _t.perf_counter()
             EXTRAS_INFO["ann_append"] = {
                 "build_sec": round(t1 - t0, 3),
@@ -845,11 +848,11 @@ def _extras_registry():
                 "compact_sec": round(t5 - t4, 3),
                 "appended": report["appended"],
                 "removed": rm["tombstones_total"],
-                "compacted_rows": crep.get("codes_rows_after"),
+                "compacted_rows": crep.get("index_rows_after"),
                 "occupancy_shift_tv": report["occupancy_shift_tv"],
                 "err_ratio": report["err_ratio"],
             }
-            n = spark.read.parquet(f"{d}/idx/codes").count()
+            n = load_manifest(spark, f"{d}/idx").read(spark, "codes").count()
             return spark.createDataFrame([(n,)], "n long")
         finally:
             shutil.rmtree(d, ignore_errors=True)

@@ -17,6 +17,9 @@ Layout
                    (ingest → bronze, metrics → silver, API query layer)
 - ``streaming``  — Structured Streaming ingest (file source, availableNow,
                    foreachBatch merge)
+- ``artifacts``  — the one crash-safe commit for mutable persisted artifacts
+                   (indexes, curate stages): versioned manifests on the
+                   Hadoop FileSystem API, plus the shared index lifecycle
 
 Everything here is DataFrame/Column-level (Catalyst-visible). Row-at-a-time
 Python UDFs are absent entirely; the deliberate Arrow-batched Pandas-UDF

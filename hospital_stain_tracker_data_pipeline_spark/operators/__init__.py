@@ -98,14 +98,13 @@ from .diffs import (  # noqa: F401
     corpus_diff_summary,
     summarize_diff,
 )
+from ..artifacts import compact_index, remove_from_index  # noqa: F401
 from .pq import (  # noqa: F401
     ann_index_drift,
     append_ann_index,
     build_ann_index,
-    compact_ann_index,
     knn_ivf_pq,
     knn_pq,
-    remove_from_ann_index,
     search_ann_index,
     load_pq_index,
     pack_codes,
@@ -128,10 +127,6 @@ from .retrieval import (  # noqa: F401
 )
 from .dedup import (  # noqa: F401
     append_fp_index,
-    compact_dedup_index,
-    compact_fp_index,
-    remove_from_dedup_index,
-    remove_from_fp_index,
     dedup_against_corpus,
     dedup_pairs_against_corpus,
     dedup_substrings,
@@ -147,12 +142,10 @@ from .dedup import (  # noqa: F401
     save_fp_index,
     minhash_signature_index,
     ngram_contamination,
-    recover_index_swap,
     save_dedup_index,
     select_cluster_representatives,
     tune_lsh_bands,
 )
-from .graph import pagerank  # noqa: F401
 from .similarity import (  # noqa: F401
     ann_hot_bucket_report,
     dequantize_embeddings,
@@ -164,8 +157,6 @@ from .similarity import (  # noqa: F401
 )
 from .audio_fp import (  # noqa: F401
     append_afp_index,
-    compact_afp_index,
-    remove_from_afp_index,
     audio_dup_pairs,
     audio_fingerprint,
     dedup_audio_against_corpus,
@@ -174,8 +165,6 @@ from .audio_fp import (  # noqa: F401
 )
 from .video_fp import (  # noqa: F401
     append_vhash_index,
-    compact_vhash_index,
-    remove_from_vhash_index,
     dedup_videos_against_corpus,
     load_vhash_index,
     save_vhash_index,
@@ -192,10 +181,8 @@ from .pdf import (  # noqa: F401
 from .multimodal import (  # noqa: F401
     append_phash_index,
     classify_media,
-    compact_phash_index,
     dedup_images_against_corpus,
     load_phash_index,
-    remove_from_phash_index,
     save_phash_index,
     extract_audio_features,
     extract_image_features,

@@ -276,12 +276,11 @@ def dedup_audio_against_corpus(
 
 def save_afp_index(index: DataFrame, path: str) -> None:
     """Persist an audio-fingerprint index under this module's revision
-    tag — the generic tagged artifact (``dedup.save_fp_index``, one
-    ``_fp_tag`` column), so a fingerprint revision can never be probed
-    against an old index silently. ``index`` is any frame carrying
-    ``media_id`` + ``afp``; only those two columns persist, NULL
-    id/fingerprint rows drop, and a sentinel keeps an EMPTY index
-    round-trippable."""
+    tag — the generic tagged artifact (``dedup.save_fp_index``), so a
+    fingerprint revision can never be probed against an old index
+    silently. ``index`` is any frame carrying ``media_id`` + ``afp``;
+    only those two columns persist and NULL id/fingerprint rows
+    drop."""
     from .dedup import save_fp_index
 
     save_fp_index(index, path, AFP_ALGO, id_col="media_id", hash_col="afp")
@@ -295,46 +294,16 @@ def append_afp_index(spark: SparkSession, path: str, fps: DataFrame) -> int:
     id/fingerprint rows drop as at save. Returns rows appended."""
     from .dedup import append_fp_index
 
-    return append_fp_index(
-        spark, path, fps, AFP_ALGO, id_col="media_id", hash_col="afp"
-    )
+    return append_fp_index(spark, path, fps, AFP_ALGO)
 
 
 def load_afp_index(spark: SparkSession, path: str) -> DataFrame:
     """Inverse of ``save_afp_index``: the ``(media_id, afp)`` index
     frame ready for ``dedup_audio_against_corpus``. Fails loudly on a
-    tagless parquet, a corrupt artifact mixing tags, or an index built
-    by a DIFFERENT fingerprint revision than this module computes —
-    probing across revisions would silently match nothing
+    root that is not a committed fingerprint artifact or an index
+    built by a DIFFERENT fingerprint revision than this module
+    computes — probing across revisions would silently match nothing
     meaningful."""
     from .dedup import load_fp_index
 
-    index, _ = load_fp_index(
-        spark, path, AFP_ALGO, id_col="media_id", hash_col="afp"
-    )
-    return index
-
-
-def remove_from_afp_index(
-    spark: SparkSession, path: str, ids: DataFrame
-) -> dict:
-    """Takedowns for the audio index: tombstone ``media_id``s so they
-    stop seeding audio near-dup verdicts in minutes (the generic
-    tagged-artifact lifecycle — ``dedup.remove_from_fp_index`` under
-    this module's revision tag; same tombstone-vs-reappend contract
-    as the ANN tier)."""
-    from .dedup import _artifact_remove
-
-    load_afp_index(spark, path)  # one validating read (tag + columns)
-    return _artifact_remove(spark, path, ids, "media_id")
-
-
-def compact_afp_index(
-    spark: SparkSession, path: str, min_ratio: float = 0.1,
-    force: bool = False,
-) -> dict:
-    """Vacuum for ``remove_from_afp_index`` tombstones."""
-    from .dedup import _artifact_compact
-
-    load_afp_index(spark, path)  # one validating read (tag + columns)
-    return _artifact_compact(spark, path, "media_id", min_ratio, force)
+    return load_fp_index(spark, path, AFP_ALGO)[0]

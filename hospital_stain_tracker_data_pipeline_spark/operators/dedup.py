@@ -20,6 +20,15 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..artifacts import (
+    add_part,
+    hadoop_fs,
+    live_rows,
+    load_manifest,
+    require_manifest,
+    _rows_part,
+    write_new,
+)
 from ..functions.text import fingerprint64_hex, normalized_text, word_shingles
 
 
@@ -691,23 +700,20 @@ def save_dedup_index(
 ) -> None:
     """Persist a MinHash signature index WITH its parameters — the
     artifact discipline the phash/CMS/HLL tiers follow, applied to the
-    text tier: constant ``_mh_num_hashes`` / ``_mh_k`` columns ride the
-    parquet so ``load_dedup_index`` returns ``(index, num_hashes, k)``
-    and a probe with mismatched parameters becomes structurally
-    impossible for artifact-mediated flows. The num_hashes half was
-    already runtime-detectable (signature length probe in
-    ``dedup_pairs_against_corpus``); the SHINGLE size ``k`` was not —
-    shingles are hashed away in the signatures, so a k=3 index probed
-    with k=5 silently estimates garbage Jaccard. Recording both closes
-    the gap. The id column NAME rides along too (``_mh_id_col``) so
-    the loader can locate the sentinel without the caller re-supplying
-    it, and the declared ``num_hashes`` is cross-checked against the
-    actual signature length being persisted (one cheap ``take(1)``) —
+    text tier: the manifest meta records ``num_hashes``, the shingle
+    size ``k`` and the id column, so ``load_dedup_index`` returns
+    ``(index, num_hashes, k)`` and a probe with mismatched parameters
+    becomes structurally impossible for artifact-mediated flows. The
+    num_hashes half was already runtime-detectable (signature length
+    probe in ``dedup_pairs_against_corpus``); the SHINGLE size ``k``
+    was not — shingles are hashed away in the signatures, so a k=3
+    index probed with k=5 silently estimates garbage Jaccard. The
+    declared ``num_hashes`` is cross-checked against the actual
+    signature length being persisted (one cheap ``take(1)``) —
     recording a wrong value would otherwise surface much later as a
     misleading "rebuild the index" probe error on a perfectly good
-    index. NULL-signature rows drop (they can never band); a NULL-id
-    sentinel row rides along so an empty index round-trips with its
-    parameters (the loader drops it)."""
+    index. NULL-signature and NULL-id rows drop (they can never
+    band). A rebuild starts with no tombstones."""
     if num_hashes < 1 or k < 1:
         raise ValueError(
             f"num_hashes={num_hashes} and k={k} must both be >= 1"
@@ -729,19 +735,14 @@ def save_dedup_index(
             "wrong value would poison every later probe; pass the "
             "num_hashes the index was built with"
         )
-    sentinel = index.sparkSession.range(1).select(
-        F.lit(None).cast(index.schema[id_col].dataType).alias(id_col),
-        F.lit(None).cast("array<long>").alias("sig"),
+    write_new(
+        index.sparkSession,
+        path,
+        "minhash",
+        {"num_hashes": num_hashes, "k": k, "id_col": id_col,
+         "hash_col": "sig"},
+        {"data": slim},
     )
-    (
-        slim.unionByName(sentinel)
-        .withColumn("_mh_num_hashes", F.lit(num_hashes))
-        .withColumn("_mh_k", F.lit(k))
-        .withColumn("_mh_id_col", F.lit(id_col))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    clear_index_lifecycle_state(path)  # a REBUILD starts takedown-free
 
 
 def load_dedup_index(spark, path: str):
@@ -749,40 +750,16 @@ def load_dedup_index(spark, path: str):
     k)`` ready for ``dedup_against_corpus`` /
     ``dedup_pairs_against_corpus`` (feed the returned params into the
     probe so index and probe cannot disagree). The id column comes
-    from the artifact's recorded ``_mh_id_col`` — the caller never
-    re-supplies it. Fails loudly on a parameterless parquet or an
-    artifact mixing parameter sets."""
-    df = spark.read.parquet(path)
-    needed = {"_mh_num_hashes", "_mh_k", "_mh_id_col"}
-    if not needed.issubset(df.columns):
+    from the manifest — the caller never re-supplies it. Tombstoned
+    ids are suppressed."""
+    m = require_manifest(spark, path, "minhash")
+    num_hashes, k = int(m.meta["num_hashes"]), int(m.meta["k"])
+    if num_hashes < 1 or k < 1:
         raise ValueError(
-            f"{path} has no _mh_num_hashes/_mh_k/_mh_id_col columns — "
-            "not a save_dedup_index artifact (legacy plain-parquet "
-            "indexes carry no k: rebuild with save_dedup_index)"
+            f"{path} records num_hashes={num_hashes} k={k} — corrupt "
+            "artifact"
         )
-    metas = (
-        df.select("_mh_num_hashes", "_mh_k", "_mh_id_col")
-        .distinct()
-        .collect()
-    )
-    if len(metas) != 1:
-        raise ValueError(
-            f"{path} mixes {len(metas)} parameter sets — corrupt "
-            "artifact (rebuild, never mix index files)"
-        )
-    num_hashes = int(metas[0]["_mh_num_hashes"])
-    k = int(metas[0]["_mh_k"])
-    id_col = metas[0]["_mh_id_col"]
-    if num_hashes < 1 or k < 1 or id_col not in df.columns:
-        raise ValueError(
-            f"{path} records num_hashes={num_hashes} k={k} "
-            f"id_col={id_col!r} — corrupt artifact"
-        )
-    index = df.drop("_mh_num_hashes", "_mh_k", "_mh_id_col").filter(
-        F.col(id_col).isNotNull()  # drop the empty-safety sentinel
-    )
-    index = suppress_index_tombstones(spark, path, index, id_col)
-    return index, num_hashes, k
+    return live_rows(spark, m), num_hashes, k
 
 
 def dedup_pairs_against_corpus(
@@ -2006,18 +1983,14 @@ def save_fp_index(
     hash_col: str = "fp",
 ) -> None:
     """Persist ANY 64-bit-fingerprint index WITH a family/revision tag
-    — the generic form of the phash artifact discipline (the image
-    tier predates this helper and keeps its own two-parameter format;
-    the audio and video tiers delegate here): a constant
-    ``_fp_tag`` column rides the parquet, and ``load_fp_index``
-    validates it, so fingerprints from a different family, parameter
-    set, or algorithm revision can never be probed silently (they
-    would match nothing meaningful). Only ``(id_col, hash_col)``
-    persist — 8 B + an id per item, payloads never stored. NULL-hash
-    and NULL-id rows drop (the former can never pair; the latter is
-    the empty-index sentinel and would be lost on load); a NULL-id
-    sentinel row rides along so a legitimately EMPTY index still
-    round-trips with its tag."""
+    — the generic form of the phash artifact discipline (the audio and
+    video tiers delegate here): the manifest meta records the tag and
+    the column names, and ``load_fp_index`` validates the tag, so
+    fingerprints from a different family, parameter set, or algorithm
+    revision can never be probed silently (they would match nothing
+    meaningful). Only ``(id_col, hash_col)`` persist — 8 B + an id per
+    item, payloads never stored. NULL-hash and NULL-id rows drop (they
+    can never pair). A rebuild starts with no tombstones."""
     if not tag:
         raise ValueError("tag must be a non-empty fingerprint family tag")
     missing = [c for c in (id_col, hash_col) if c not in index.columns]
@@ -2026,20 +1999,41 @@ def save_fp_index(
             f"index frame lacks column(s) {missing} — pass a "
             f"fingerprint output ({id_col}, {hash_col})"
         )
-    slim = index.select(id_col, hash_col).filter(
+    write_new(
+        index.sparkSession,
+        path,
+        "fp_tagged",
+        {"tag": tag, "id_col": id_col, "hash_col": hash_col},
+        {"data": _slim_fp(index, id_col, hash_col)},
+    )
+
+
+def _slim_fp(df: DataFrame, id_col: str, hash_col: str) -> DataFrame:
+    """The persisted ``(id, hash)`` projection: NULL-id and NULL-hash
+    rows can never pair, so they drop."""
+    return df.select(id_col, hash_col).filter(
         F.col(hash_col).isNotNull() & F.col(id_col).isNotNull()
     )
-    sentinel = index.sparkSession.range(1).select(
-        F.lit(None).cast("long").alias(id_col),
-        F.lit(None).cast("long").alias(hash_col),
+
+
+def _append_fp_rows(spark: SparkSession, m, rows: DataFrame) -> int:
+    """Append ``rows`` to a committed fingerprint index ``m`` (the
+    meta's id/hash columns, NULL rows dropped as at save) as one more
+    data part. Returns the rows appended."""
+    id_col, hash_col = m.meta["id_col"], m.meta["hash_col"]
+    missing = [c for c in (id_col, hash_col) if c not in rows.columns]
+    if missing:
+        raise ValueError(
+            f"fingerprint frame lacks column(s) {missing} — the index at "
+            f"{m.root} holds ({id_col}, {hash_col})"
+        )
+    slim = _slim_fp(rows, id_col, hash_col).localCheckpoint(
+        eager=True  # count and write read one snapshot
     )
-    (
-        slim.unionByName(sentinel)
-        .withColumn("_fp_tag", F.lit(tag))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-    clear_index_lifecycle_state(path)  # a REBUILD starts takedown-free
+    n = slim.count()
+    if n:
+        add_part(spark, m, "data", slim, "appends")
+    return n
 
 
 def append_fp_index(
@@ -2047,423 +2041,59 @@ def append_fp_index(
     path: str,
     fps: DataFrame,
     tag: str,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
 ) -> int:
     """Append survivor fingerprints to an EXISTING ``save_fp_index``
-    artifact — validated against the caller's ``tag`` first (one
-    artifact read), so a probe computed under one family/revision can
-    never append onto an index of another. NULL id/hash rows drop
-    exactly as in ``save_fp_index``. Returns the number of rows
-    appended."""
-    load_fp_index(spark, path, tag, id_col=id_col, hash_col=hash_col)
-    missing = [c for c in (id_col, hash_col) if c not in fps.columns]
-    if missing:
+    artifact — validated against the caller's ``tag`` first, so a
+    probe computed under one family/revision can never append onto an
+    index of another. ``fps`` carries the artifact's recorded id/hash
+    columns; NULL id/hash rows drop exactly as in ``save_fp_index``.
+    Returns the number of rows appended."""
+    return _append_fp_rows(spark, _fp_manifest(spark, path, tag), fps)
+
+
+def _fp_manifest(spark: SparkSession, path: str, expected_tag: str | None):
+    m = require_manifest(spark, path, "fp_tagged")
+    if expected_tag is not None and m.meta["tag"] != expected_tag:
         raise ValueError(
-            f"fingerprint frame lacks column(s) {missing} — pass a "
-            f"fingerprint output ({id_col}, {hash_col})"
+            f"{path} records fingerprint tag {m.meta['tag']!r}; this "
+            f"probe computes {expected_tag!r} — rebuild the index "
+            "(cross-family/revision probes would miss every near-dup)"
         )
-    slim = (
-        fps.select(id_col, hash_col)
-        .filter(F.col(hash_col).isNotNull() & F.col(id_col).isNotNull())
-        .localCheckpoint(eager=True)  # count and write read one snapshot
-    )
-    n = slim.count()
-    if n:
-        slim.withColumn("_fp_tag", F.lit(tag)).write.mode("append").parquet(
-            path
-        )
-    return n
+    return m
 
 
 def load_fp_index(
     spark: SparkSession,
     path: str,
     expected_tag: str | None,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
 ) -> tuple[DataFrame, str]:
     """Inverse of ``save_fp_index``: ``(index, tag)`` with the index
-    frame ready for ``hamming_pairs_against_corpus``. One artifact
-    read. Fails loudly on a tagless parquet, a corrupt artifact mixing
-    tags, an artifact whose columns do not match the caller's, or —
-    when ``expected_tag`` is given — a tag other than it (wrong
-    family / parameter set / revision). Pass ``expected_tag=None``
-    when the caller derives its parameters FROM the artifact (it must
-    then validate the returned tag's family itself, the way
+    frame — the manifest's ``(id_col, hash_col)``, tombstoned ids
+    suppressed — ready for ``hamming_pairs_against_corpus``. Fails
+    loudly on a root that is not a committed fingerprint artifact or —
+    when ``expected_tag`` is given — a tag other than it (wrong family
+    / parameter set / revision). Pass ``expected_tag=None`` when the
+    caller derives its parameters FROM the artifact (it must then
+    validate the returned tag's family itself, the way
     ``video_fp.load_vhash_index`` does)."""
-    df = spark.read.parquet(path)
-    if "_fp_tag" not in df.columns:
-        raise ValueError(
-            f"{path} has no _fp_tag column — not a save_fp_index artifact"
-        )
-    missing = [c for c in (id_col, hash_col) if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"{path} lacks column(s) {missing} — written under different "
-            "column names than this probe expects"
-        )
-    tags = [r["_fp_tag"] for r in df.select("_fp_tag").distinct().collect()]
-    if len(tags) != 1:
-        raise ValueError(
-            f"{path} mixes {len(tags)} fingerprint tags — corrupt "
-            "artifact (append through append_fp_index, never mix files)"
-        )
-    if expected_tag is not None and tags[0] != expected_tag:
-        raise ValueError(
-            f"{path} records fingerprint tag {tags[0]!r}; this probe "
-            f"computes {expected_tag!r} — rebuild the index "
-            "(cross-family/revision probes would miss every near-dup)"
-        )
-    index = df.drop("_fp_tag").filter(
-        F.col(id_col).isNotNull()  # drop the empty-safety sentinel
-    )
-    index = suppress_index_tombstones(spark, path, index, id_col)
-    return index, tags[0]
+    m = _fp_manifest(spark, path, expected_tag)
+    return live_rows(spark, m), m.meta["tag"]
 
 
-# ---------------------------------------------------------------------------
-# Index deletion lifecycle (round 12): tombstones + deferred compaction
-# for every parquet fingerprint artifact (the ANN index got this in
-# round 11 via pq.remove_from_ann_index; the fingerprint tiers get the
-# same takedown semantics here). One generic engine serves the three
-# artifact formats — generic tagged fp (audio/video), MinHash
-# signature, and image phash — because they share the same shape:
-# a parquet dir of (id, payload-free hash[es]) + constant meta columns
-# + a NULL-id empty-safety sentinel row.
-# ---------------------------------------------------------------------------
-
-
-def _artifact_tombstone_dir(path: str) -> str:
-    return path.rstrip("/") + "_tombstones"
-
-
-def clear_index_lifecycle_state(path: str) -> None:
-    """Drop the sibling tombstone / in-flight-compaction dirs for an
-    index artifact — called by every ``save_*_index`` REBUILD: the ANN
-    tier keeps its tombstones INSIDE the index dir so a rebuild clears
-    them implicitly; the fp tiers' sibling dirs would otherwise
-    survive the overwrite and silently suppress legitimately-present
-    ids in the brand-new index (and a later compact would physically
-    delete them).
-
-    REFUSES when the index path itself is absent but ``<path>_old`` /
-    ``<path>_compacting`` exist: that is the compact-swap crash window
-    where a sibling dir holds the ONLY copy of the index, and deleting
-    it here would destroy the last copy before recovery is possible —
-    run ``recover_index_swap`` first (or remove the dirs manually if
-    the rebuild really should start from nothing)."""
-    import os
-    import shutil
-
-    p = path.rstrip("/")
-    if not os.path.isdir(p):
-        survivors = [
-            d for d in (p + "_old", p + "_compacting") if os.path.isdir(d)
-        ]
-        if survivors:
-            raise ValueError(
-                f"index path {p} is missing but {survivors} exist — this "
-                "is an interrupted compact swap and a sibling dir holds "
-                "the only copy of the index; run recover_index_swap("
-                f"{p!r}) before rebuilding (or delete the dirs manually "
-                "to really start from nothing)"
-            )
-    for d in (p + "_tombstones", p + "_compacting", p + "_old"):
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def recover_index_swap(path: str) -> dict:
-    """Recover an index artifact from a crash inside
-    ``_artifact_compact``'s two-rename swap window (index path missing,
-    last copy in a sibling dir). Safe to run any time:
-
-    - index path present → nothing to do (stale siblings are fsck's
-      business; a re-run of compact clears them);
-    - path missing + ``<path>_compacting`` present → the rewrite was
-      count-validated BEFORE the first rename, so the compacting copy
-      is the complete post-fold index: rename it in and drop the
-      pre-fold ``_old`` copy and the (already folded) tombstone dir;
-    - path missing + only ``<path>_old`` present → rename the pre-fold
-      copy back; tombstones are kept (still unfolded, suppression
-      still applies on load).
-    """
-    import os
-    import shutil
-
-    p = path.rstrip("/")
-    old, compacting = p + "_old", p + "_compacting"
-    if os.path.isdir(p):
-        return {"recovered": False, "reason": "index present", "path": p}
-    if os.path.isdir(compacting):
-        os.rename(compacting, p)
-        shutil.rmtree(old, ignore_errors=True)
-        shutil.rmtree(_artifact_tombstone_dir(p), ignore_errors=True)
-        return {"recovered": True, "from": "compacting", "path": p}
-    if os.path.isdir(old):
-        os.rename(old, p)
-        return {"recovered": True, "from": "old", "path": p}
-    return {
-        "recovered": False,
-        "reason": "nothing to recover from (no index, no sibling copies)",
-        "path": p,
-    }
-
-
-def suppress_index_tombstones(
-    spark: SparkSession, path: str, index: DataFrame, id_col: str
-) -> DataFrame:
-    """Anti-join an index frame against its artifact's tombstone set
-    (a sibling ``<path>_tombstones`` parquet of bare ids) — called by
-    every index LOADER, so a tombstoned id stops matching probes the
-    moment the tombstone lands, without touching the index files.
-    Same contract as the ANN tier: a tombstone suppresses its id even
-    if the same id is APPENDED again later (compaction folds the
-    re-append away too) — re-adding a removed id requires compacting
-    first. No tombstone dir ⇒ identity.
-
-    No forced broadcast hint: tombstones are usually tiny (AQE picks
-    broadcast from the measured size), but a deployment that defers
-    compaction past the 10% recommendation grows the distinct set
-    unboundedly with takedowns, and an unconditional hint would pin
-    that whole set in driver memory on every load — let AQE fall back
-    to a shuffle anti-join when it is big."""
-    import os
-
-    td = _artifact_tombstone_dir(path)
-    if not os.path.isdir(td):
-        return index
-    tomb = spark.read.parquet(td).select(id_col).distinct()
-    return index.join(tomb, id_col, "left_anti")
-
-
-def _artifact_remove(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    id_col: str,
-    compact_ratio_threshold: float = 0.1,
-) -> dict:
-    """Tombstone ``ids`` against an ALREADY-VALIDATED index artifact
-    (the public wrappers run their tier's loader first, so a torn or
-    wrong-family artifact rejects before anything is written). The
-    ids are distinct-ed and snapshot-pinned (localCheckpoint) before
-    the append — a broken producer fails here with the artifact
-    untouched. Unknown ids tombstone harmlessly (the anti-join
-    ignores them) but inflate the reported ratio. Returns the
-    ANN-shaped report: requested / tombstones_total / index_rows
-    (physical, pre-suppression) / tombstone_ratio /
-    compact_recommended. Single-writer per artifact, like
-    append/compact."""
-    import os
-
-    if id_col not in ids.columns:
-        raise ValueError(
-            f"ids frame lacks column {id_col!r} (has {ids.columns}) — "
-            f"the index at {path} keys on {id_col!r}"
-        )
-    # cast to the INDEX's id type before anything is written: two
-    # removes carrying different physical id types (int32 vs int64
-    # parquet from different tools) would otherwise mix schemas in the
-    # tombstone dir and make every subsequent index load unreadable
-    id_type = spark.read.parquet(path).schema[id_col].dataType
-    tomb = (
-        ids.select(F.col(id_col).cast(id_type).alias(id_col))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_req = tomb.count()
-    td = _artifact_tombstone_dir(path)
-    if n_req:
-        tomb.write.mode("append").parquet(td)
-    n_tomb = (
-        spark.read.parquet(td).select(id_col).distinct().count()
-        if os.path.isdir(td)
-        else 0
-    )
-    n_rows = (
-        spark.read.parquet(path).filter(F.col(id_col).isNotNull()).count()
-    )
-    ratio = round(n_tomb / n_rows, 6) if n_rows else 0.0
-    return {
-        "requested": n_req,
-        "tombstones_total": n_tomb,
-        "index_rows": n_rows,
-        "tombstone_ratio": ratio,
-        "compact_recommended": ratio >= compact_ratio_threshold,
-    }
-
-
-def _artifact_compact(
-    spark: SparkSession,
-    path: str,
-    id_col: str,
-    min_ratio: float,
-    force: bool,
-) -> dict:
-    """Fold tombstones into the index files — the artifact's vacuum,
-    deferred by default (below ``min_ratio`` the per-load anti-join is
-    cheaper than the rewrite). The rewritten files land in a sibling
-    ``<path>_compacting`` dir and are COUNT-VALIDATED against an
-    independently-derived survivor count before any swap — a rewrite
-    that loses or duplicates rows raises with the original artifact
-    intact. The swap then renames through ``<path>_old`` so every
-    crash window leaves either a valid artifact or a loudly-missing
-    path, never a silently-partial one. A crash BETWEEN the two
-    renames leaves the path missing with the last copies in
-    ``<path>_old`` (pre-fold) and ``<path>_compacting`` (validated
-    post-fold) — ``recover_index_swap`` renames one back, and
-    ``clear_index_lifecycle_state`` refuses to delete the sibling dirs
-    while the index path is absent, so a rebuild cannot destroy the
-    only copy first. Meta columns and the NULL-id
-    sentinel ride the rewrite untouched (NULL join keys never match
-    the tombstone semi/anti joins). Probe results are identical
-    before and after — compaction changes storage, never semantics."""
-    import os
-    import shutil
-
-    p = path.rstrip("/")
-    td = _artifact_tombstone_dir(p)
-    raw = spark.read.parquet(p)
-    n_rows = raw.filter(F.col(id_col).isNotNull()).count()
-    if not os.path.isdir(td):
-        return {
-            "compacted": False,
-            "reason": "no tombstones",
-            "index_rows": n_rows,
-        }
-    tomb = spark.read.parquet(td).select(id_col).distinct()
-    n_tomb = tomb.count()
-    ratio = round(n_tomb / n_rows, 6) if n_rows else 0.0
-    if not force and ratio < min_ratio:
-        return {
-            "compacted": False,
-            "reason": f"tombstone_ratio {ratio} < min_ratio {min_ratio}",
-            "index_rows": n_rows,
-            "tombstones_total": n_tomb,
-            "tombstone_ratio": ratio,
-        }
-    compacting = p + "_compacting"
-    if os.path.isdir(compacting):
-        shutil.rmtree(compacting)  # leftover from a pre-swap crash
-    n_before = raw.count()  # incl. sentinel
-    n_dead = raw.join(tomb, id_col, "left_semi").count()
-    raw.join(tomb, id_col, "left_anti").write.mode("overwrite").parquet(
-        compacting
-    )
-    n_after = spark.read.parquet(compacting).count()
-    if n_after != n_before - n_dead:
-        raise ValueError(
-            f"compaction rewrite produced {n_after} rows, expected "
-            f"{n_before} - {n_dead} = {n_before - n_dead} — aborting "
-            f"with the original artifact intact (stale files under "
-            f"{compacting}?)"
-        )
-    old = p + "_old"
-    if os.path.isdir(old):
-        shutil.rmtree(old)
-    os.rename(p, old)
-    os.rename(compacting, p)
-    shutil.rmtree(old)
-    shutil.rmtree(td)
-    return {
-        "compacted": True,
-        "index_rows_before": n_rows,
-        "index_rows_after": n_rows - n_dead,
-        "folded_tombstones": n_tomb,
-        "tombstone_ratio": ratio,
-    }
-
-
-def remove_from_fp_index(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    tag: str,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
-    compact_ratio_threshold: float = 0.1,
-) -> dict:
-    """Takedowns for the generic tagged fingerprint artifact (the
-    audio/video tiers): tombstone ``ids`` so they stop matching
-    probes in minutes, deferring the file rewrite to
-    ``compact_fp_index``. The caller's ``tag`` is validated against
-    the artifact first — removing under the wrong family/revision is
-    rejected, same as probing under it."""
-    load_fp_index(spark, path, tag, id_col=id_col, hash_col=hash_col)
-    return _artifact_remove(
-        spark, path, ids, id_col,
-        compact_ratio_threshold=compact_ratio_threshold,
-    )
-
-
-def compact_fp_index(
-    spark: SparkSession,
-    path: str,
-    tag: str | None = None,
-    min_ratio: float = 0.1,
-    force: bool = False,
-    id_col: str = "media_id",
-    hash_col: str = "fp",
-) -> dict:
-    """Vacuum for ``remove_from_fp_index`` tombstones — threshold-
-    gated rewrite of the artifact minus the tombstoned ids."""
-    load_fp_index(spark, path, tag, id_col=id_col, hash_col=hash_col)
-    return _artifact_compact(spark, path, id_col, min_ratio, force)
-
-
-def remove_from_dedup_index(
-    spark: SparkSession,
-    path: str,
-    ids: DataFrame,
-    compact_ratio_threshold: float = 0.1,
-) -> dict:
-    """Takedowns for the MinHash signature artifact
-    (``save_dedup_index``): tombstone ``ids`` under the artifact's
-    OWN recorded id column — the text tier's equivalent of
-    ``pq.remove_from_ann_index``. A removed document stops seeding
-    near-dup verdicts immediately; ``compact_dedup_index`` folds the
-    tombstones into the files later."""
-    load_dedup_index(spark, path)  # validates (params, single set)
-    id_col = spark.read.parquet(path).select("_mh_id_col").first()[0]
-    return _artifact_remove(
-        spark, path, ids, id_col,
-        compact_ratio_threshold=compact_ratio_threshold,
-    )
-
-
-def compact_dedup_index(
-    spark: SparkSession,
-    path: str,
-    min_ratio: float = 0.1,
-    force: bool = False,
-) -> dict:
-    """Vacuum for ``remove_from_dedup_index`` tombstones."""
-    load_dedup_index(spark, path)  # validates (params, single set)
-    id_col = spark.read.parquet(path).select("_mh_id_col").first()[0]
-    return _artifact_compact(spark, path, id_col, min_ratio, force)
-
-
-def index_fsck(
-    spark: SparkSession,
-    path: str,
-    id_col: str = "media_id",
-) -> dict:
+def index_fsck(spark: SparkSession, path: str) -> dict:
     """Read-only artifact health check ("fsck") for every index format
     this library persists — the command an operator runs before
     trusting an index after a crash, a migration, or an unknown
     provenance. Detects the artifact KIND from its own metadata and
-    re-runs that kind's loader validation (tag/params present, single
-    set, columns match, marker intact). Covered kinds — one per
+    re-runs that kind's loader validation. Covered kinds — one per
     ``save_*`` writer in the package (pinned by
     ``tests/test_index_lifecycle.py::test_index_fsck_covers_every_save_writer``):
 
-    - lifecycle-bearing indexes (live rows post-tombstone-suppression,
-      physical rows, tombstone count/ratio, stale
-      ``_compacting``/``_old`` swap leftovers): marker-protocol ANN dir
-      (``ann_ivf_pq``), generic ``_fp_tag`` fingerprint (the audio-afp
-      and video-vhash writers wrap it), MinHash ``_mh_*``, image-phash
-      ``_phash_*``;
+    - manifest-committed indexes (``artifacts``; live rows after
+      tombstone suppression, physical rows, tombstone count/ratio, the
+      live manifest version): ANN dir (``ann_ivf_pq``), generic
+      fingerprint (``fp_tagged`` — the audio-afp and video-vhash
+      writers wrap it), MinHash (``minhash``), image phash (``phash``);
     - parameterized summary/model artifacts (loader-validated +
       row-counted; replaced wholesale, never row-deleted, so no
       tombstone state): ``quantile_sketch`` (``_dq_*`` — the dyadic
@@ -2477,35 +2107,42 @@ def index_fsck(
     beyond the table itself. Nothing is mutated; a failed validation
     comes back as ``ok=False`` + the loader's error text instead of a
     raise, so a fleet sweep over many artifacts reports per-artifact
-    instead of stopping at the first bad one. ``id_col`` only matters
-    for the generic fingerprint kind (whose artifact doesn't record
-    the id column name — the MinHash and phash kinds carry theirs)."""
-    import json as _json
-    import os as _os
-
+    instead of stopping at the first bad one."""
     p = path.rstrip("/")
     report: dict = {"path": p, "ok": False}
-    report["stale_dirs"] = [
-        d
-        for d in (p + "_compacting", p + "_old")
-        if _os.path.isdir(d)
-    ]
-    if not _os.path.isdir(p) and report["stale_dirs"]:
-        # compact-swap crash window: the sibling dirs hold the LAST
-        # copy of the index (``_compacting`` is the count-validated
-        # post-fold copy, ``_old`` the pre-fold one) — recoverable,
-        # so say so instead of a generic read failure
-        report["kind"] = "crashed_swap"
-        report["error"] = (
-            f"index path missing with {report['stale_dirs']} present — "
-            "interrupted compact swap; the sibling dirs hold the last "
-            f"good copy. Run recover_index_swap({p!r}) to restore it; "
-            "do NOT rebuild (clear_index_lifecycle_state refuses) "
-            "until recovered"
-        )
-        return report
     try:
-        if _os.path.isfile(p):
+        m = load_manifest(spark, p)
+        fs, jp = hadoop_fs(spark, p)
+        if m is not None:
+            report["kind"] = m.kind
+            report["version"] = m.version
+            if "tombstones" not in m.parts:
+                raise ValueError(f"manifest kind {m.kind!r} is not an index")
+            if m.kind == "minhash":
+                _, nh, k = load_dedup_index(spark, p)
+                report["meta"] = {"num_hashes": nh, "k": k}
+            elif m.kind == "phash":
+                from .multimodal import load_phash_index
+
+                _, algo, hs = load_phash_index(spark, p)
+                report["meta"] = {"algo": algo, "hash_size": hs}
+            elif m.kind == "fp_tagged":
+                report["meta"] = {"tag": load_fp_index(spark, p, None)[1]}
+            else:
+                report["meta"] = m.meta
+            id_col = m.meta["id_col"]
+            report["rows"] = m.read(spark, _rows_part(m)).count()
+            report["live_rows"] = live_rows(spark, m).count()
+            tomb = m.read(spark, "tombstones")
+            report["tombstones"] = (
+                0 if tomb is None else tomb.select(id_col).distinct().count()
+            )
+            report["tombstone_ratio"] = (
+                round(report["tombstones"] / report["rows"], 6)
+                if report["rows"]
+                else 0.0
+            )
+        elif fs.isFile(jp):
             # the one non-parquet artifact: the text-probe JSON file
             report["kind"] = "text_probe"
             from .features import load_text_probe
@@ -2514,7 +2151,7 @@ def index_fsck(
             report["meta"] = {"dim": dim}
             report["rows"] = int(len(w))
         elif all(
-            _os.path.isdir(_os.path.join(p, d))
+            fs.isDirectory(jp.suffix(f"/{d}"))
             for d in ("grams", "contexts", "meta")
         ):
             # ngram LM: three nested parquet tables + validated meta
@@ -2524,72 +2161,19 @@ def index_fsck(
             lm = load_ngram_lm(spark, p)
             report["meta"] = {"n": lm.n}
             report["rows"] = lm.grams.count()
-        elif _os.path.exists(_os.path.join(p, "_INDEX_OK")) or _os.path.isdir(
-            _os.path.join(p, "codes")
-        ):
-            report["kind"] = "ann_ivf_pq"
-            marker = _os.path.join(p, "_INDEX_OK")
-            if not _os.path.exists(marker):
-                raise ValueError(
-                    "codes/ present but _INDEX_OK missing — torn ANN "
-                    "artifact (interrupted build/append/remove/compact); "
-                    "rebuild with build_ann_index"
-                )
-            with open(marker) as f:
-                meta = _json.load(f)
-            report["meta"] = {
-                k: meta[k]
-                for k in ("id_col", "vec_col", "appends", "removes")
-                if k in meta
-            }
-            n_phys = spark.read.parquet(_os.path.join(p, "codes")).count()
-            tomb_dir = _os.path.join(p, "tombstones")
-            n_tomb = (
-                spark.read.parquet(tomb_dir).distinct().count()
-                if _os.path.isdir(tomb_dir)
-                else 0
-            )
-            report["rows"] = n_phys
-            # unknown ids tombstone harmlessly, so live_rows is a
-            # LOWER bound for the ANN kind (exact for the fp kinds)
-            report["live_rows"] = n_phys - n_tomb
-            report["tombstones"] = n_tomb
-            report["tombstone_ratio"] = (
-                round(n_tomb / n_phys, 6) if n_phys else 0.0
-            )
         else:
-            df = spark.read.parquet(p)
+            # parameterized summary/model artifacts: loader-validated +
+            # row-counted, but no id/tombstone lifecycle (a sketch or
+            # codebook is replaced wholesale, never row-deleted —
+            # takedown = rebuild); an unreadable root is an index root
+            # without a manifest: the one "not a committed artifact" error
+            try:
+                df = spark.read.parquet(p)
+            except Exception:
+                require_manifest(spark, p)
+                raise
             cols = set(df.columns)
-            if "_mh_num_hashes" in cols:
-                report["kind"] = "minhash"
-                index, nh, k = load_dedup_index(spark, p)
-                report["meta"] = {"num_hashes": nh, "k": k}
-                mh_id = spark.read.parquet(p).select("_mh_id_col").first()[0]
-                id_col = mh_id
-            elif "_phash_algo" in cols:
-                report["kind"] = "phash"
-                from .multimodal import load_phash_index
-
-                index, algo, hs = load_phash_index(spark, p)
-                report["meta"] = {"algo": algo, "hash_size": hs}
-                id_col = "media_id"
-            elif "_fp_tag" in cols:
-                report["kind"] = "fp_tagged"
-                rest = cols - {"_fp_tag", id_col}
-                if id_col not in cols or len(rest) != 1:
-                    raise ValueError(
-                        f"fp artifact columns {sorted(cols)} don't match "
-                        f"(id_col={id_col!r} + one hash column + _fp_tag)"
-                    )
-                index, tag = load_fp_index(
-                    spark, p, None, id_col=id_col, hash_col=rest.pop()
-                )
-                report["meta"] = {"tag": tag}
-            # ---- parameterized summary/model artifacts: loader-
-            # validated + row-counted, but no id/tombstone lifecycle
-            # (a sketch or codebook is replaced wholesale, never
-            # row-deleted — takedown = rebuild)
-            elif "_dq_levels" in cols:  # BEFORE _cms_: shares columns
+            if "_dq_levels" in cols:  # BEFORE _cms_: shares columns
                 report["kind"] = "quantile_sketch"
                 from .sketch import load_quantile_sketch
 
@@ -2601,7 +2185,6 @@ def index_fsck(
                     "by": by,
                 }
                 report["rows"] = sk.count()
-                index = None
             elif "_cms_width" in cols:
                 report["kind"] = "cms_sketch"
                 from .sketch import load_cms_sketch
@@ -2609,7 +2192,6 @@ def index_fsck(
                 sk, width, depth, by = load_cms_sketch(spark, p)
                 report["meta"] = {"width": width, "depth": depth, "by": by}
                 report["rows"] = sk.count()
-                index = None
             elif "_hll_p" in cols:
                 report["kind"] = "hll_sketch"
                 from .sketch import load_hll_sketch
@@ -2617,7 +2199,6 @@ def index_fsck(
                 sk, hp, by = load_hll_sketch(spark, p)
                 report["meta"] = {"p": hp, "by": by}
                 report["rows"] = sk.count()
-                index = None
             elif "_bloom_m" in cols:
                 report["kind"] = "bloom_sketch"
                 from .sketch import load_bloom_sketch
@@ -2625,7 +2206,6 @@ def index_fsck(
                 sk, m_bits, bk, by = load_bloom_sketch(spark, p)
                 report["meta"] = {"m_bits": m_bits, "k": bk, "by": by}
                 report["rows"] = sk.count()
-                index = None
             elif cols == {"cluster", "pos", "val", "k", "dim"}:
                 report["kind"] = "ivf_centroids"
                 from .similarity import load_ivf_index
@@ -2634,7 +2214,6 @@ def index_fsck(
                 report["meta"] = {"k": int(cent.shape[0]),
                                   "dim": int(cent.shape[1])}
                 report["rows"] = df.count()
-                index = None
             elif cols == {"sub", "code", "pos", "val", "m", "n_codes",
                           "dsub"}:
                 report["kind"] = "pq_codebooks"
@@ -2646,35 +2225,11 @@ def index_fsck(
                     "dsub": int(cb.shape[2]),
                 }
                 report["rows"] = df.count()
-                index = None
             else:
-                raise ValueError(
-                    "no recognizable index metadata "
-                    f"(columns {sorted(cols)}) — not a persisted index"
-                )
-            if index is not None:
-                report["live_rows"] = index.count()
-                report["rows"] = df.filter(
-                    F.col(id_col).isNotNull()
-                ).count()
-                td = _artifact_tombstone_dir(p)
-                report["tombstones"] = (
-                    spark.read.parquet(td).select(id_col).distinct().count()
-                    if _os.path.isdir(td)
-                    else 0
-                )
-                report["tombstone_ratio"] = (
-                    round(report["tombstones"] / report["rows"], 6)
-                    if report["rows"]
-                    else 0.0
-                )
-        report["ok"] = not report["stale_dirs"]
-        if report["stale_dirs"]:
-            report["error"] = (
-                "stale lifecycle dirs from an interrupted swap: "
-                f"{report['stale_dirs']} — inspect, then delete them or "
-                "re-run compact"
-            )
+                # not a sketch or model table: an index root without a
+                # manifest — the one "not a committed artifact" error
+                require_manifest(spark, p)
+        report["ok"] = True
     except Exception as exc:  # noqa: BLE001 — fleet-sweep contract
         report["error"] = f"{type(exc).__name__}: {exc}"
     return report

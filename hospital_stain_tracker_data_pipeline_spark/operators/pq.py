@@ -43,6 +43,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..artifacts import (
+    add_part,
+    live_rows,
+    require_manifest,
+    write_new,
+)
 from .dedup import fanout, materialize
 from .similarity import (
     QUANT_SCALE,
@@ -70,6 +76,10 @@ __all__ = [
     "append_ann_index",
     "search_ann_index",
 ]
+
+_ANN_KIND = "ann_ivf_pq"
+# driver-side bound on the per-search ADC table (q x m x n_codes int64)
+ADC_TABLE_MAX_BYTES = 1 << 30
 
 
 def _pq_codes_batch(
@@ -338,18 +348,36 @@ def _adc_table_np(
     zip_with/aggregate expression."""
     cb = np.ascontiguousarray(codebooks, dtype=np.int64)
     m, kk, dsub = cb.shape
-    rows = query.select(
-        F.col(query_id_col).alias("_qid"),
-        quantize_vec_long(F.col(vec_col)).alias("_qv"),
-    ).collect()
+    # the table is q x m x n_codes int64 on the driver: bound q before
+    # collecting. The limit rides the one collect job — an Arrow
+    # collect runs a limit as a single job, where Row collect() scans
+    # partitions in growing rounds, one job each
+    max_q = max(1, ADC_TABLE_MAX_BYTES // (m * kk * 8))
+    rows = (
+        query.select(
+            F.col(query_id_col).alias("_qid"),
+            quantize_vec_long(F.col(vec_col)).alias("_qv"),
+        )
+        .limit(max_q + 1)
+        .toArrow()
+    )
+    if rows.num_rows > max_q:
+        raise ValueError(
+            f"more than {max_q} query rows: their ADC table (q x {m} x "
+            f"{kk} int64) would exceed ADC_TABLE_MAX_BYTES="
+            f"{ADC_TABLE_MAX_BYTES} on the driver — search in batches "
+            "of at most that many queries"
+        )
     qid_type = query.schema[query_id_col].dataType.simpleString()
     qids = []
     mats = []
-    for r in rows:
-        if r["_qv"] is None:
+    for qid, qv in zip(
+        rows.column("_qid").to_pylist(), rows.column("_qv").to_pylist()
+    ):
+        if qv is None:
             continue
-        qids.append(r["_qid"])
-        qv = np.asarray(r["_qv"], dtype=np.int64).reshape(m, dsub)
+        qids.append(qid)
+        qv = np.asarray(qv, dtype=np.int64).reshape(m, dsub)
         diff = qv[:, None, :] - cb  # (m, k, dsub)
         mats.append((diff * diff).sum(axis=2))
     tbl = (
@@ -684,29 +712,24 @@ def build_ann_index(
 ) -> None:
     """The nightly-fit half of a persistent IVF-PQ index: fit the
     coarse quantizer and product codebooks ONCE per corpus version and
-    write the complete search-ready artifact under ``path`` —
-    ``path/ivf`` (centroids, ``save_ivf_index``), ``path/pq``
-    (codebooks, ``save_pq_index``), and ``path/codes`` (the encoded
-    corpus ``(id, cell, pq_code)``, ~``m`` bytes + an id per vector).
+    write the complete search-ready artifact under ``path`` — the
+    ``ivf`` part (centroids, ``save_ivf_index``), ``pq`` (codebooks,
+    ``save_pq_index``), and ``codes`` (the encoded corpus ``(id, cell,
+    pq_code)``, ~``m`` bytes + an id per vector).
     ``search_ann_index`` then answers queries WITHOUT touching the raw
     embedding lake — the artifact is the 100 TB serving shape: raw
     embeddings are read exactly once (here), every later search scans
     only the byte codes of the probed cells.
 
-    The three sub-artifacts are mutually dependent (codes are only
-    meaningful under THEIR centroids/codebooks), so the build is
-    marker-committed: the ``_INDEX_OK`` marker is removed before any
-    overwrite and written only after all three land — a crash
-    mid-rebuild leaves a loudly-rejected torn artifact instead of a
-    silently-wrong mixed one (``path`` must be driver-visible
-    local/NFS, the ``_StageStore`` contract)."""
-    import json
-    import os
+    The sub-artifacts are mutually dependent (codes are only
+    meaningful under THEIR centroids/codebooks), so they commit as one
+    manifest version (``artifacts``): a crash mid-rebuild leaves the
+    previous build live, never a mixed one.
 
+    Manifest parts: ``ivf``, ``pq``, ``stats``, ``codes[]`` and
+    ``tombstones[]``; meta: the build parameters, ``id_col`` and the
+    ``appends``/``removes``/``compactions`` counters."""
     spark = corpus.sparkSession
-    marker = os.path.join(path, "_INDEX_OK")
-    if os.path.exists(marker):
-        os.remove(marker)
     # ONE quantized pass over the raw corpus serves both fits, the
     # encode AND the stats baseline (round 14; guide §2.4) — the
     # pre-round-14 build re-read and re-quantized the corpus four
@@ -723,8 +746,6 @@ def build_ann_index(
     cb = pq_fit_codebooks(
         corpus, m, n_codes, iters, id_col, vec_col, prepared=src
     )
-    save_ivf_index(spark, cents, f"{path}/ivf")
-    save_pq_index(spark, cb, f"{path}/pq")
     encoded = materialize(
         src.select(
             F.col("_id").alias(id_col),
@@ -733,28 +754,32 @@ def build_ann_index(
             _pq_error_udf(cb)(F.col("_qv")).alias("_err"),
         )
     )
-    encoded.select(id_col, "cell", "pq_code").write.mode(
-        "overwrite"
-    ).parquet(f"{path}/codes")
-    # fit-time per-cell occupancy + quantization error — the drift
-    # baseline every later append_ann_index compares its batch against
-    encoded.groupBy("cell").agg(
-        F.count("*").alias("n"),
-        F.sum(F.col("_err").cast("decimal(38,0)")).alias("err_sum"),
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/stats")
-    os.makedirs(path, exist_ok=True)
-    with open(marker, "w") as f:
-        json.dump(
-            {
-                "n_clusters": n_clusters,
-                "m": m,
-                "n_codes": n_codes,
-                "iters": iters,
-                "id_col": id_col,
-                "appends": 0,
-            },
-            f,
-        )
+    write_new(
+        spark,
+        path,
+        _ANN_KIND,
+        {
+            "n_clusters": n_clusters,
+            "m": m,
+            "n_codes": n_codes,
+            "iters": iters,
+            "id_col": id_col,
+        },
+        {
+            "ivf": lambda p: save_ivf_index(spark, cents, p),
+            "pq": lambda p: save_pq_index(spark, cb, p),
+            "codes": encoded.select(id_col, "cell", "pq_code"),
+            # fit-time per-cell occupancy + quantization error — the
+            # drift baseline every later append_ann_index compares its
+            # batch against
+            "stats": encoded.groupBy("cell")
+            .agg(
+                F.count("*").alias("n"),
+                F.sum(F.col("_err").cast("decimal(38,0)")).alias("err_sum"),
+            )
+            .coalesce(1),
+        },
+    )
 
 
 def append_ann_index(
@@ -767,7 +792,7 @@ def append_ann_index(
 ) -> dict:
     """Incremental half of the persistent IVF-PQ index: encode a delta
     batch (a daily crawl's new embeddings) under the EXISTING
-    centroids/codebooks and append it to ``path/codes`` — the whole
+    centroids/codebooks and append it to the index's codes — the whole
     embedding lake is never re-read, which is the difference between
     O(delta) and O(100 TB) for a nightly refresh. ``search_ann_index``
     then serves (build + appends) transparently: the codes table just
@@ -776,7 +801,7 @@ def append_ann_index(
     Because the fits are frozen, append quality decays as the corpus
     distribution drifts away from fit time. The returned DRIFT REPORT
     quantifies that against the fit-time baseline ``build_ann_index``
-    persisted under ``path/stats``:
+    persisted as its ``stats`` part:
 
     - ``occupancy_shift_tv``: total-variation distance between the
       fit-time per-cell occupancy distribution and the delta batch's
@@ -787,47 +812,30 @@ def append_ann_index(
     - ``refit_recommended``: True when either exceeds its threshold —
       the operator's signal to schedule a full ``build_ann_index``.
 
-    Marker discipline matches the build: the delta is fully validated
-    and its stats computed BEFORE ``_INDEX_OK`` is removed, so bad
-    input never tears the artifact; the marker is rewritten (with
-    ``appends`` incremented) only after the codes append lands — a
-    crash mid-append leaves a loudly-rejected torn artifact.
+    The delta is fully validated and its stats computed BEFORE
+    anything is written, so bad input never touches the artifact; the
+    codes land as one more ``codes`` part dir, committed (with
+    ``appends`` incremented) by a new manifest version.
 
     The delta frame must carry the id column the index was built with
-    (the marker records it) plus ``vec_col``. Appended ids are NOT
+    (the manifest records it) plus ``vec_col``. Appended ids are NOT
     dedup'd against existing codes — run the corpus dedup tier first
     (`dedup_against_corpus`), same as the build's contract."""
-    import json
-    import os
-
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — cannot append to an "
-            "incomplete or torn index; rebuild with build_ann_index"
-        )
-    with open(marker) as f:
-        meta = json.load(f)
-    id_col = meta["id_col"]
+    man = require_manifest(spark, path, _ANN_KIND)
+    id_col = man.meta["id_col"]
     missing = [c for c in (id_col, vec_col) if c not in new_vectors.columns]
     if missing:
         raise ValueError(
             f"delta frame lacks column(s) {missing} — the index at "
             f"{path} was built with id_col={id_col!r}"
         )
-    if not os.path.isdir(os.path.join(path, "stats")):
-        raise ValueError(
-            f"{path} has no fit-time stats (pre-append-era artifact) — "
-            "rebuild with build_ann_index to enable appends"
-        )
-    cents = load_ivf_index(spark, f"{path}/ivf")
-    cb = load_pq_index(spark, f"{path}/pq")
+    cents, cb = _load_fits(spark, man)
     # ONE eager pass over the delta serves validation, stats AND the
     # codes append (round 14 — was a checkpoint of the raw delta plus
     # two separate UDF passes): the materialize pins the snapshot and
     # forces the whole batch through the assign/error UDFs, so
-    # wrong-dim or corrupt vectors still fail HERE — before the marker
-    # comes off — and the stats collect / codes write below are a
+    # wrong-dim or corrupt vectors still fail HERE — before anything is
+    # written — and the stats collect / codes write below are a
     # model-sized aggregation and a flat projection of the same frame.
     encoded = materialize(
         fanout(new_vectors.select(id_col, vec_col))
@@ -852,25 +860,35 @@ def append_ann_index(
         )
         .collect()
     }
-    fit_stats = {
-        int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
-        for r in spark.read.parquet(f"{path}/stats").collect()
-    }
     n_new = sum(n for n, _ in new_stats.values())
     if n_new:
-        os.remove(marker)
-        encoded.select(id_col, "cell", "pq_code").write.mode(
-            "append"
-        ).parquet(f"{path}/codes")
-        meta["appends"] = int(meta.get("appends", 0)) + 1
-        with open(marker, "w") as f:
-            json.dump(meta, f)
+        man = add_part(
+            spark, man, "codes", encoded.select(id_col, "cell", "pq_code"),
+            "appends",
+        )
     report = _drift_report(
-        fit_stats, new_stats, err_ratio_threshold, occupancy_shift_threshold
+        _fit_stats(spark, man), new_stats, err_ratio_threshold,
+        occupancy_shift_threshold,
     )
     report["appended"] = n_new
-    report["appends"] = int(meta.get("appends", 0))
+    report["appends"] = int(man.meta["appends"])
     return report
+
+
+def _load_fits(spark, man) -> tuple[np.ndarray, np.ndarray]:
+    """(centroids, codebooks) of a committed ANN index."""
+    return (
+        load_ivf_index(spark, man.paths("ivf")[0]),
+        load_pq_index(spark, man.paths("pq")[0]),
+    )
+
+
+def _fit_stats(spark, man) -> dict:
+    """The build-time ``{cell: (n, err_sum)}`` drift baseline."""
+    return {
+        int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
+        for r in man.read(spark, "stats").collect()
+    }
 
 
 def _drift_report(
@@ -946,218 +964,24 @@ def ann_index_drift(
     notice. Needs only ``vec_col`` on the input (no ids — nothing is
     encoded or written); ``appended`` in the report counts the probed
     vectors."""
-    import json
-    import os
-
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — cannot probe an "
-            "incomplete or torn index; rebuild with build_ann_index"
-        )
-    if not os.path.isdir(os.path.join(path, "stats")):
-        raise ValueError(
-            f"{path} has no fit-time stats (pre-append-era artifact) — "
-            "rebuild with build_ann_index to enable drift probes"
-        )
-    with open(marker) as f:
-        meta = json.load(f)
+    man = require_manifest(spark, path, _ANN_KIND)
     if vec_col not in vectors.columns:
         raise ValueError(
             f"probe frame lacks column {vec_col!r} — pass vec_col= "
             "matching your embedding column (the append-path contract)"
         )
-    cents = load_ivf_index(spark, f"{path}/ivf")
-    cb = load_pq_index(spark, f"{path}/pq")
+    cents, cb = _load_fits(spark, man)
     new_stats = {
         int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
         for r in _cell_stats(vectors, cents, cb, vec_col).collect()
     }
-    fit_stats = {
-        int(r["cell"]): (int(r["n"]), int(r["err_sum"]))
-        for r in spark.read.parquet(f"{path}/stats").collect()
-    }
     report = _drift_report(
-        fit_stats, new_stats, err_ratio_threshold, occupancy_shift_threshold
+        _fit_stats(spark, man), new_stats, err_ratio_threshold,
+        occupancy_shift_threshold,
     )
     report["appended"] = sum(n for n, _ in new_stats.values())
-    report["appends"] = int(meta.get("appends", 0))
+    report["appends"] = int(man.meta["appends"])
     return report
-
-
-def remove_from_ann_index(
-    spark,
-    path: str,
-    ids: DataFrame,
-    compact_ratio_threshold: float = 0.1,
-) -> dict:
-    """Deletions for the persistent index — the lifecycle piece
-    takedowns and dedup-driven retractions need at 100 TB, where
-    "rebuild the index" is a night of cluster time but "stop serving
-    these ids" must land in minutes. Appends the ids to a TOMBSTONE
-    parquet beside ``codes``; ``search_ann_index`` anti-joins it, so
-    removed ids stop appearing immediately while the (expensive) codes
-    table is untouched — the vacuum-analog write-amplification
-    deferral. ``compact_ann_index`` later folds tombstones into codes
-    when the ratio passes a threshold.
-
-    ``ids`` is a DataFrame carrying the index's id column (the marker
-    records its name — fail-fast otherwise); unknown ids tombstone
-    harmlessly (the anti-join ignores them) but inflate the reported
-    ratio, so feed takedown lists already intersected with the corpus
-    where possible. Ids are distinct-ed and snapshot-pinned
-    (localCheckpoint) BEFORE the marker comes off — the
-    ``append_ann_index`` discipline: bad input never tears the
-    artifact, and a crash mid-write leaves a loudly-rejected torn
-    index, not a silently-partial one.
-
-    Contract note: a tombstone suppresses its id even if the same id
-    is APPENDED again later — compaction would fold the re-append away
-    too. Re-adding a previously removed id requires compacting first
-    (tombstones then clear). The returned report carries
-    ``tombstones_total`` / ``codes_rows`` / ``tombstone_ratio`` /
-    ``compact_recommended`` so a cron can chain the compaction."""
-    import json
-    import os
-
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — cannot remove from an "
-            "incomplete or torn index; rebuild with build_ann_index"
-        )
-    with open(marker) as f:
-        meta = json.load(f)
-    id_col = meta["id_col"]
-    if id_col not in ids.columns:
-        raise ValueError(
-            f"ids frame lacks column {id_col!r} (has {ids.columns}) — "
-            f"the index at {path} was built with id_col={id_col!r}"
-        )
-    # pin + validate BEFORE the marker comes off (forces the frame; a
-    # broken producer fails here, leaving the artifact intact)
-    tomb = ids.select(id_col).distinct().localCheckpoint(eager=True)
-    n_req = tomb.count()
-    if n_req:
-        os.remove(marker)
-        tomb.write.mode("append").parquet(os.path.join(path, "tombstones"))
-        meta["removes"] = int(meta.get("removes", 0)) + 1
-        with open(marker, "w") as f:
-            json.dump(meta, f)
-    n_tomb = (
-        spark.read.parquet(os.path.join(path, "tombstones"))
-        .distinct()
-        .count()
-        if os.path.isdir(os.path.join(path, "tombstones"))
-        else 0
-    )
-    n_codes = spark.read.parquet(f"{path}/codes").count()
-    ratio = round(n_tomb / n_codes, 6) if n_codes else 0.0
-    return {
-        "requested": n_req,
-        "tombstones_total": n_tomb,
-        "codes_rows": n_codes,
-        "tombstone_ratio": ratio,
-        "compact_recommended": ratio >= compact_ratio_threshold,
-        "removes": int(meta.get("removes", 0)),
-    }
-
-
-def compact_ann_index(
-    spark,
-    path: str,
-    min_ratio: float = 0.1,
-    force: bool = False,
-) -> dict:
-    """Fold tombstones into the codes table — the index's vacuum:
-    rewrite ``codes`` minus tombstoned ids, clear the tombstone file,
-    and return the before/after accounting. Deferred by default: the
-    rewrite costs a full codes-table pass, so it only runs when the
-    tombstone ratio has reached ``min_ratio`` (or ``force=True``) —
-    below that, the per-search anti-join is cheaper than the rewrite.
-
-    Marker discipline: the compacted codes land in a sibling directory
-    and are COUNT-VALIDATED before ``_INDEX_OK`` comes off — the
-    rewritten row count must equal the codes rows minus the tombstones
-    that actually intersect the codes table (computed independently
-    via a semi-join), so a rewrite that loses or duplicates rows
-    raises with the artifact still intact; only then does the
-    directory swap + tombstone clear happen, and the marker is
-    rewritten last — a crash mid-swap leaves a loudly-rejected torn
-    artifact (the ``build_ann_index`` contract). Single-writer
-    contract (shared with append/remove): a concurrent append between
-    the read and the swap is NOT detected — serialize lifecycle ops
-    per artifact. Search results are identical before and after
-    (pinned by test): compaction changes storage, never semantics."""
-    import json
-    import os
-    import shutil
-
-    marker = os.path.join(path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — cannot compact an "
-            "incomplete or torn index; rebuild with build_ann_index"
-        )
-    with open(marker) as f:
-        meta = json.load(f)
-    id_col = meta["id_col"]
-    tomb_dir = os.path.join(path, "tombstones")
-    codes_dir = os.path.join(path, "codes")
-    n_codes = spark.read.parquet(codes_dir).count()
-    if not os.path.isdir(tomb_dir):
-        return {
-            "compacted": False,
-            "reason": "no tombstones",
-            "codes_rows": n_codes,
-        }
-    tomb = spark.read.parquet(tomb_dir).distinct()
-    n_tomb = tomb.count()
-    ratio = round(n_tomb / n_codes, 6) if n_codes else 0.0
-    if not force and ratio < min_ratio:
-        return {
-            "compacted": False,
-            "reason": f"tombstone_ratio {ratio} < min_ratio {min_ratio}",
-            "codes_rows": n_codes,
-            "tombstones_total": n_tomb,
-            "tombstone_ratio": ratio,
-        }
-    compact_dir = os.path.join(path, "codes_compacting")
-    if os.path.isdir(compact_dir):
-        shutil.rmtree(compact_dir)  # leftover from a pre-marker crash
-    codes = spark.read.parquet(codes_dir)
-    # expected survivor count, derived independently of the rewrite:
-    # only tombstones that actually intersect the codes table remove rows
-    n_dead = codes.join(tomb, id_col, "left_semi").count()
-    codes.join(tomb, id_col, "left_anti").write.mode("overwrite").parquet(
-        compact_dir
-    )
-    # validate the rewrite BEFORE the marker comes off: a readable-but-
-    # wrong codes table (lost or duplicated rows) must raise here, with
-    # the original artifact untouched
-    n_live = spark.read.parquet(compact_dir).count()
-    if n_live != n_codes - n_dead:
-        raise ValueError(
-            f"compaction rewrite produced {n_live} rows, expected "
-            f"{n_codes} - {n_dead} = {n_codes - n_dead} — aborting with "
-            f"the original artifact intact (stale files under "
-            f"{compact_dir}?)"
-        )
-    os.remove(marker)
-    shutil.rmtree(codes_dir)
-    os.rename(compact_dir, codes_dir)
-    shutil.rmtree(tomb_dir)
-    meta["compactions"] = int(meta.get("compactions", 0)) + 1
-    with open(marker, "w") as f:
-        json.dump(meta, f)
-    return {
-        "compacted": True,
-        "codes_rows_before": n_codes,
-        "codes_rows_after": n_live,
-        "folded_tombstones": n_tomb,
-        "tombstone_ratio": ratio,
-        "compactions": meta["compactions"],
-    }
 
 
 def search_ann_index(
@@ -1179,38 +1003,15 @@ def search_ann_index(
     OFF here — index queries usually come from an external id domain
     (see ``knn_pq``); turn it on when querying the corpus with itself.
 
-    The corpus id column is whatever ``build_ann_index`` encoded (the
-    codes table's non-``cell``/``pq_code`` column). Ids tombstoned by
-    ``remove_from_ann_index`` are anti-joined out of the candidate set
-    here (takedowns stop serving immediately, before any
-    ``compact_ann_index`` folds them into the codes table)."""
-    import os
-
-    if not os.path.exists(os.path.join(path, "_INDEX_OK")):
-        raise ValueError(
-            f"{path} has no _INDEX_OK marker — the index build did not "
-            "complete (a torn ivf/pq/codes mix would search silently "
-            "wrong); rebuild with build_ann_index"
-        )
-    cents = load_ivf_index(spark, f"{path}/ivf")
-    cb = load_pq_index(spark, f"{path}/pq")
-    codes = spark.read.parquet(f"{path}/codes")
-    rest = [c for c in codes.columns if c not in ("cell", "pq_code")]
-    if (
-        len(rest) != 1
-        or "cell" not in codes.columns
-        or "pq_code" not in codes.columns
-    ):
-        raise ValueError(
-            f"{path}/codes has columns {codes.columns} — expected "
-            "exactly (id, cell, pq_code) from build_ann_index"
-        )
-    id_col = rest[0]
-    tomb_dir = os.path.join(path, "tombstones")
-    if os.path.isdir(tomb_dir):
-        codes = codes.join(
-            spark.read.parquet(tomb_dir), id_col, "left_anti"
-        )
+    The corpus id column is the one ``build_ann_index`` encoded (the
+    manifest records it). Ids tombstoned by
+    ``artifacts.remove_from_index`` are anti-joined out of the
+    candidate set here (takedowns stop serving immediately, before any
+    ``artifacts.compact_index`` folds them into the codes)."""
+    man = require_manifest(spark, path, _ANN_KIND)
+    cents, cb = _load_fits(spark, man)
+    id_col = man.meta["id_col"]
+    codes = live_rows(spark, man)
     probes = query.select(
         F.col(query_id_col),
         as_double_array(F.col(vec_col)).alias("_pv"),

@@ -302,12 +302,7 @@ def append_vhash_index(spark: SparkSession, path: str, hashes: DataFrame) -> int
 
     _, algo, hash_size, n_samples = load_vhash_index(spark, path)
     return append_fp_index(
-        spark,
-        path,
-        hashes,
-        _vhash_tag(algo, hash_size, n_samples),
-        id_col="media_id",
-        hash_col="vhash",
+        spark, path, hashes, _vhash_tag(algo, hash_size, n_samples)
     )
 
 
@@ -316,16 +311,19 @@ def load_vhash_index(spark: SparkSession, path: str):
     n_samples)`` with the parameters parsed FROM the artifact's tag —
     the ``load_phash_index`` shape, so artifact-mediated flows hash
     their probes with exactly the index's configuration. One artifact
-    read (``dedup.load_fp_index`` with ``expected_tag=None`` — tag
-    presence, uniqueness, and columns validated there; the family
-    parse here). Fails loudly on a tagless/mixed artifact, a tag from
-    a different fingerprint family or revision, or an unparseable
-    tag."""
+    read (``dedup.load_fp_index`` with ``expected_tag=None``; the
+    family parse here). Fails loudly on a root that is not a committed
+    fingerprint artifact, a tag from a different fingerprint family or
+    revision, or an unparseable tag."""
     from .dedup import load_fp_index
 
-    index, tag = load_fp_index(
-        spark, path, None, id_col="media_id", hash_col="vhash"
-    )
+    index, tag = load_fp_index(spark, path, None)
+    missing = [c for c in ("media_id", "vhash") if c not in index.columns]
+    if missing:
+        raise ValueError(
+            f"{path} lacks column(s) {missing} — written under different "
+            "column names than this probe expects"
+        )
     try:
         family, algo, hs, ns = tag.split(":")
         hash_size = int(hs)
@@ -345,27 +343,3 @@ def load_vhash_index(spark: SparkSession, path: str):
             "artifact this module can probe (rebuild the index)"
         )
     return index, algo, hash_size, n_samples
-
-
-def remove_from_vhash_index(
-    spark: SparkSession, path: str, ids: DataFrame
-) -> dict:
-    """Takedowns for the video index: tombstone ``media_id``s so they
-    stop seeding video near-dup verdicts in minutes (the generic
-    tagged-artifact lifecycle under the artifact's OWN recorded tag;
-    same tombstone-vs-reappend contract as the ANN tier)."""
-    from .dedup import _artifact_remove
-
-    load_vhash_index(spark, path)  # one validating read (tag family)
-    return _artifact_remove(spark, path, ids, "media_id")
-
-
-def compact_vhash_index(
-    spark: SparkSession, path: str, min_ratio: float = 0.1,
-    force: bool = False,
-) -> dict:
-    """Vacuum for ``remove_from_vhash_index`` tombstones."""
-    from .dedup import _artifact_compact
-
-    load_vhash_index(spark, path)  # one validating read (tag family)
-    return _artifact_compact(spark, path, "media_id", min_ratio, force)

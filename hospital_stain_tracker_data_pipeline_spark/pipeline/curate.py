@@ -51,13 +51,13 @@ from __future__ import annotations
 
 import hashlib
 import json
-import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..artifacts import load_manifest, write_new
 from ..functions.text import quality_score, token_count
 from ..operators.dedup import (
     DEFAULT_MAX_BUCKET,
@@ -159,17 +159,18 @@ class _StageStore:
     curation recipe: a crash at stage 9 of a 100 TB run must not
     repeat stages 1-8's candidate generation.
 
-    Each checkpointed stage writes its product (an id-set, or the
-    span/substring text product) as parquet under
-    ``run_dir/<stage>/data`` and then — only after the write completes
-    — a ``_STAGE_OK`` marker holding the stage's CONFIG-CHAIN HASH:
+    Each checkpointed stage is one artifact root ``run_dir/<stage>``
+    committed through the versioned-manifest protocol
+    (``artifacts``): its product (an id-set, or the span/substring
+    text product) lands as a parquet ``data`` part, and the manifest
+    create — the commit point — records the stage's CONFIG-CHAIN HASH:
     md5 over this stage's parameters AND the hash of every
     checkpointed stage upstream of it. A rerun with the same
-    ``run_dir`` loads any stage whose marker hash matches (resume);
+    ``run_dir`` loads any stage whose recorded hash matches (resume);
     a changed parameter invalidates that stage AND everything
     downstream (the chain hash differs), which recomputes exactly the
-    affected suffix. A kill mid-write leaves no marker, so the partial
-    parquet is overwritten on resume — the marker is the commit point.
+    affected suffix. A kill mid-write leaves the previous version (or
+    none) live, and the next commit sweeps the partial parquet.
 
     Loading from parquet doubles as the plan-growth truncation the
     in-memory path gets from ``materialize`` (a parquet scan is a flat
@@ -181,15 +182,13 @@ class _StageStore:
     docs, embeddings, a probe scorer) are represented in the hash only
     by their scalar companions (thresholds, dims); swapping one for a
     different artifact with the same thresholds requires a fresh
-    run_dir. ``run_dir`` must be on a filesystem visible to the driver
-    (local/NFS here; an object-store generalization would route the
-    marker I/O through ``pyarrow.fs``)."""
+    run_dir. ``run_dir`` may carry any Hadoop scheme (``file:``,
+    ``hdfs:``, ``s3a:``); one writer per run_dir at a time."""
 
     def __init__(self, spark, run_dir: str) -> None:
         self.spark = spark
-        self.run_dir = run_dir
+        self.run_dir = run_dir.rstrip("/")
         self.chain = "root"
-        os.makedirs(run_dir, exist_ok=True)
 
     def _advance(self, name: str, params: dict) -> tuple[str, str]:
         payload = json.dumps(
@@ -199,22 +198,18 @@ class _StageStore:
         )
         h = hashlib.md5(payload.encode()).hexdigest()
         self.chain = h
-        return os.path.join(self.run_dir, name), h
+        return f"{self.run_dir}/{name}", h
 
     def load_or(self, name: str, params: dict, compute) -> DataFrame:
         path, h = self._advance(name, params)
-        data = os.path.join(path, "data")
-        marker = os.path.join(path, "_STAGE_OK")
-        if os.path.exists(marker):
-            with open(marker) as f:
-                if f.read() == h:
-                    return self.spark.read.parquet(data)
-            os.remove(marker)  # stale config — rebuild below
-        compute().write.mode("overwrite").parquet(data)
-        os.makedirs(path, exist_ok=True)
-        with open(marker, "w") as f:
-            f.write(h)
-        return self.spark.read.parquet(data)
+        m = load_manifest(self.spark, path)
+        if m is None or m.meta.get("chain") != h:
+            # absent or stale config — rebuild
+            m = write_new(
+                self.spark, path, "curate_stage", {"chain": h},
+                {"data": compute()},
+            )
+        return m.read(self.spark, "data")
 
 
 def default_quality_stages(

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..artifacts import hadoop_fs, read_text, write_text
 from ..operators.upsert import dedup_last_writer, upsert_last_writer_wins
 
 SCHEMA_FILE = "_lake_schema.json"
@@ -103,18 +104,8 @@ class LakeTable:
             )
         self.data_format = data_format
 
-    def _hadoop_fs(self):
-        """Resolve ``self.path`` through the Hadoop ``FileSystem`` API so
-        every maintenance op works on whatever scheme the path carries
-        (file:, hdfs:, s3a:, ...) — the same resolution Spark's own
-        readers/writers use. Returns ``(FileSystem, Path)``."""
-        jvm = self.spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(self.path)
-        fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        return fs, jpath
-
     def exists(self) -> bool:
-        fs, root = self._hadoop_fs()
+        fs, root = hadoop_fs(self.spark, self.path)
         if not fs.exists(root):
             return False
         jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
@@ -127,7 +118,7 @@ class LakeTable:
         )
 
     def _schema_file(self):
-        fs, root = self._hadoop_fs()
+        fs, root = hadoop_fs(self.spark, self.path)
         return fs, self.spark._jvm.org.apache.hadoop.fs.Path(root, SCHEMA_FILE)
 
     def recorded_schema(self) -> StructType | None:
@@ -136,13 +127,7 @@ class LakeTable:
         fs, path = self._schema_file()
         if not fs.exists(path):
             return None
-        stream = fs.open(path)
-        try:
-            text = self.spark._jvm.org.apache.commons.io.IOUtils.toString(
-                stream, "UTF-8"
-            )
-        finally:
-            stream.close()
+        text = read_text(self.spark, fs, path)
         return StructType.fromJson(json.loads(text))
 
     def _record_schema(self, schema: StructType | None) -> None:
@@ -157,11 +142,7 @@ class LakeTable:
         tmp = self.spark._jvm.org.apache.hadoop.fs.Path(
             path.getParent(), f"{SCHEMA_FILE}.tmp"
         )
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(schema.json().encode()))
-        finally:
-            out.close()
+        write_text(fs, tmp, schema.json(), overwrite=True)
         # HDFS-style rename does not replace an existing target
         fs.delete(path, False)
         fs.rename(tmp, path)
@@ -273,7 +254,7 @@ class LakeTable:
         from urllib.parse import unquote
 
         out: dict[str, int] = {}
-        fs, root = self._hadoop_fs()
+        fs, root = hadoop_fs(self.spark, self.path)
         if not fs.exists(root):
             return out
         prefix = f"{self.partition_col}="
@@ -388,7 +369,7 @@ class LakeTable:
 
         import json
 
-        fs, root = self._hadoop_fs()
+        fs, root = hadoop_fs(self.spark, self.path)
         jvm_path = self.spark._jvm.org.apache.hadoop.fs.Path
         marker = jvm_path(root, "_VACUUM_PENDING")
         if not victims:

@@ -1327,23 +1327,20 @@ def stream_ann_ingest(
     makes the LEDGER replay-safe, but ``append_ann_index`` MUTATES the
     artifact, which foreachBatch's at-least-once delivery would
     double-append on a replay. The batch is therefore anti-joined
-    against the ids already in ``codes`` first — a replayed
+    against the ids already in the index's codes first — a replayed
     micro-batch becomes an explicit appended=0 ledger row instead of
     a silent duplicate. This rides the lifecycle's existing
     id-immutability contract (updating a vector means remove →
     compact → re-append, never append-over); genuinely new ids are
-    unaffected. The anti-join reads the codes table's ID COLUMN only
-    (parquet column pruning) — not the byte codes."""
-    import json as _json
+    unaffected. The anti-join reads the codes' ID COLUMN only
+    (parquet column pruning) — not the byte codes — through the
+    manifest live at each micro-batch."""
+    from ..artifacts import require_manifest
 
-    marker = os.path.join(index_path, "_INDEX_OK")
-    if not os.path.exists(marker):
-        raise ValueError(
-            f"{index_path} has no _INDEX_OK marker — build the index "
-            "with build_ann_index before streaming appends into it"
-        )
-    with open(marker) as f:
-        id_col = _json.load(f)["id_col"]
+    def _index():
+        return require_manifest(spark, index_path, "ann_ivf_pq")
+
+    id_col = _index().meta["id_col"]
 
     ledger_schema = (
         "appended long, occupancy_shift_tv double, err_ratio double, "
@@ -1352,9 +1349,7 @@ def stream_ann_ingest(
     vecs = spark.readStream.schema(schema).parquet(source_dir)
 
     def _append(batch_df: DataFrame) -> DataFrame | None:
-        existing = spark.read.parquet(
-            os.path.join(index_path, "codes")
-        ).select(id_col)
+        existing = _index().read(spark, "codes").select(id_col)
         # dropDuplicates first: a producer retry can land the SAME ids
         # twice within one micro-batch (two files, one trigger) — the
         # anti-join alone only guards against ids already in codes

@@ -284,46 +284,60 @@ def cmd_curate(args) -> None:
 
 
 def _add_index_lifecycle_args(parser) -> None:
-    """The shared --remove/--compact flag set for the four fingerprint
-    index commands (one definition: the command bodies already share
-    _fp_index_lifecycle)."""
+    """The shared --remove/--compact flag set for every index command
+    (one definition: the command bodies share _index_lifecycle)."""
     parser.add_argument("--remove",
-                        help="parquet of ids to TOMBSTONE from --output "
-                        "(takedown path: suppressed at every probe "
-                        "immediately, files untouched until --compact); "
+                        help="parquet of ids (the index's id column) to "
+                        "TOMBSTONE from --output (takedown path: "
+                        "suppressed at every probe and search "
+                        "immediately, rows untouched until --compact); "
                         "prints the report JSON")
     parser.add_argument("--compact", action="store_true",
-                        help="fold tombstones into the index files "
-                        "(threshold-gated rewrite); prints the report JSON")
+                        help="fold tombstones into the index rows "
+                        "(threshold-gated rewrite, committed as a new "
+                        "manifest version); prints the report JSON")
     parser.add_argument("--compact-min-ratio", type=float, default=0.1)
     parser.add_argument("--compact-force", action="store_true")
 
 
-def _fp_index_lifecycle(spark, args, remove_fn, compact_fn) -> bool:
-    """Shared --remove/--compact handling for the four fingerprint
-    index commands (the ann_index lifecycle shape): tombstone ids from
-    a parquet of ids, or fold tombstones into the files. Returns True
-    when a lifecycle action ran (the build path is skipped)."""
+def _index_lifecycle(spark, args) -> bool:
+    """Shared --remove/--compact handling for the index commands:
+    tombstone ids from a parquet of ids, or fold tombstones into the
+    index rows (``artifacts.remove_from_index`` / ``compact_index``,
+    one engine for every index kind). Returns True when a lifecycle
+    action ran (the build path is skipped)."""
     import json as _json
 
+    from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+        compact_index,
+        remove_from_index,
+    )
+
+    if args.remove:
+        report = remove_from_index(
+            spark, args.output, spark.read.parquet(args.remove)
+        )
+    elif args.compact:
+        report = compact_index(
+            spark, args.output,
+            min_ratio=args.compact_min_ratio,
+            force=args.compact_force,
+        )
+    else:
+        return False
+    print(_json.dumps(report))
+    return True
+
+
+def _fp_index_lifecycle(spark, args) -> bool:
+    """--remove/--compact for the four fingerprint index commands;
+    without either, a corpus batch (--input) is required."""
     if args.remove and args.compact:
         raise SystemExit(
             "--remove and --compact are mutually exclusive — one "
             "lifecycle action per invocation"
         )
-    if args.remove:
-        report = remove_fn(
-            spark, args.output, spark.read.parquet(args.remove)
-        )
-        print(_json.dumps(report))
-        return True
-    if args.compact:
-        report = compact_fn(
-            spark, args.output,
-            min_ratio=args.compact_min_ratio,
-            force=args.compact_force,
-        )
-        print(_json.dumps(report))
+    if _index_lifecycle(spark, args):
         return True
     if not args.input:
         raise SystemExit(
@@ -347,15 +361,8 @@ def cmd_dedup_index(args) -> None:
         save_dedup_index,
     )
 
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        compact_dedup_index,
-        remove_from_dedup_index,
-    )
-
     spark = get_spark(app_name="dedup_index")
-    if _fp_index_lifecycle(
-        spark, args, remove_from_dedup_index, compact_dedup_index
-    ):
+    if _fp_index_lifecycle(spark, args):
         return
     docs = spark.read.parquet(args.input)
     idx = minhash_signature_index(
@@ -383,8 +390,6 @@ def cmd_ann_index(args) -> None:
         ann_index_drift,
         append_ann_index,
         build_ann_index,
-        compact_ann_index,
-        remove_from_ann_index,
     )
 
     modes = [
@@ -399,19 +404,7 @@ def cmd_ann_index(args) -> None:
             "one lifecycle action per invocation"
         )
     spark = get_spark(app_name="ann_index")
-    if args.remove:
-        report = remove_from_ann_index(
-            spark, args.output, spark.read.parquet(args.remove)
-        )
-        print(_json.dumps(report))
-        return
-    if args.compact:
-        report = compact_ann_index(
-            spark, args.output,
-            min_ratio=args.compact_min_ratio,
-            force=args.compact_force,
-        )
-        print(_json.dumps(report))
+    if _index_lifecycle(spark, args):
         return
     if not args.embeddings:
         raise SystemExit(
@@ -441,14 +434,18 @@ def cmd_ann_index(args) -> None:
         id_col=args.id_col,
         vec_col=args.vec_col,
     )
-    n = spark.read.parquet(f"{args.output}/codes").count()
+    from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+        load_manifest,
+    )
+
+    n = load_manifest(spark, args.output).read(spark, "codes").count()
     print(f"indexed {n} vectors -> {args.output}")
 
 
 def cmd_index_fsck(args) -> None:
     """Read-only health check for ANY persisted index artifact (ANN /
     MinHash / phash / generic fingerprint): kind detection, loader
-    validation, lifecycle state (tombstones, stale swap dirs) — one
+    validation, lifecycle state (tombstones, manifest version) — one
     JSON report per --path, ok=false + error text instead of a crash,
     so a fleet sweep reports per-artifact."""
     import json as _json
@@ -459,7 +456,7 @@ def cmd_index_fsck(args) -> None:
 
     spark = get_spark(app_name="index_fsck")
     for p in args.path:
-        print(_json.dumps(index_fsck(spark, p, id_col=args.id_col)))
+        print(_json.dumps(index_fsck(spark, p)))
 
 
 def cmd_ann_stream(args) -> None:
@@ -656,7 +653,10 @@ def cmd_dedup_filter(args) -> None:
     ingest gate: old corpus text is never re-read. A `save_dedup_index`
     artifact supplies its own num_hashes + shingle k (--num-hashes is
     ignored then — the artifact is authoritative); a legacy plain
-    signature parquet falls back to the flags."""
+    signature parquet (no manifest) falls back to the flags."""
+    from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+        load_manifest,
+    )
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
         dedup_against_corpus,
         load_dedup_index,
@@ -664,11 +664,12 @@ def cmd_dedup_filter(args) -> None:
 
     spark = get_spark(app_name="dedup_filter")
     new_docs = spark.read.parquet(args.input)
-    raw = spark.read.parquet(args.index)
-    if {"_mh_num_hashes", "_mh_k"}.issubset(raw.columns):
+    if load_manifest(spark, args.index) is not None:
         index, num_hashes, k = load_dedup_index(spark, args.index)
     else:
-        index, num_hashes, k = raw, args.num_hashes, 3
+        index, num_hashes, k = (
+            spark.read.parquet(args.index), args.num_hashes, 3
+        )
     kept = dedup_against_corpus(
         new_docs, index,
         threshold=args.threshold, num_hashes=num_hashes, k=k,
@@ -690,15 +691,8 @@ def cmd_image_index(args) -> None:
         save_phash_index,
     )
 
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
-        compact_phash_index,
-        remove_from_phash_index,
-    )
-
     spark = get_spark(app_name="image_index")
-    if _fp_index_lifecycle(
-        spark, args, remove_from_phash_index, compact_phash_index
-    ):
+    if _fp_index_lifecycle(spark, args):
         return
     media = spark.read.parquet(args.input)
     hashes = image_phash(
@@ -828,15 +822,8 @@ def cmd_audio_index(args) -> None:
         save_afp_index,
     )
 
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        compact_afp_index,
-        remove_from_afp_index,
-    )
-
     spark = get_spark(app_name="audio_index")
-    if _fp_index_lifecycle(
-        spark, args, remove_from_afp_index, compact_afp_index
-    ):
+    if _fp_index_lifecycle(spark, args):
         return
     media = spark.read.parquet(args.input)
     fps = audio_fingerprint(media, fake_decode=args.fake_decode)
@@ -912,15 +899,8 @@ def cmd_video_index(args) -> None:
         video_phash,
     )
 
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        compact_vhash_index,
-        remove_from_vhash_index,
-    )
-
     spark = get_spark(app_name="video_index")
-    if _fp_index_lifecycle(
-        spark, args, remove_from_vhash_index, compact_vhash_index
-    ):
+    if _fp_index_lifecycle(spark, args):
         return
     media = spark.read.parquet(args.input)
     hashes = video_phash(
@@ -1431,29 +1411,12 @@ def main() -> None:
                      "through the existing index's fits and print the "
                      "drift report JSON without appending anything — "
                      "the nightly refit-or-not monitoring check")
-    pai.add_argument("--remove",
-                     help="ids parquet (the index's id column): "
-                     "tombstone these ids — search stops serving them "
-                     "immediately, codes untouched; prints the "
-                     "tombstone-ratio report JSON")
-    pai.add_argument("--compact", action="store_true",
-                     help="fold tombstones into the codes table "
-                     "(rewrite codes minus removed ids, clear "
-                     "tombstones) when the ratio warrants it; prints "
-                     "the accounting JSON")
-    pai.add_argument("--compact-min-ratio", type=float, default=0.1,
-                     help="minimum tombstones/codes ratio before "
-                     "--compact actually rewrites")
-    pai.add_argument("--compact-force", action="store_true",
-                     help="compact regardless of ratio")
+    _add_index_lifecycle_args(pai)
     pai.set_defaults(fn=cmd_ann_index)
 
     pfk = sub.add_parser("index_fsck")
     pfk.add_argument("--path", required=True, nargs="+",
                      help="one or more index artifact dirs to check")
-    pfk.add_argument("--id-col", default="media_id",
-                     help="id column for GENERIC fingerprint artifacts "
-                     "(the other kinds record theirs)")
     pfk.set_defaults(fn=cmd_index_fsck)
 
     pst = sub.add_parser("ann_stream")

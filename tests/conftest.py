@@ -56,3 +56,50 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def assert_no_orphans(spark):
+    """Check that an artifact root holds exactly the part dirs its live
+    manifest lists plus ``_manifest/``, which holds only that manifest
+    (what every commit's sweep leaves behind)."""
+    from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+        load_manifest,
+    )
+
+    def check(path: str) -> None:
+        m = load_manifest(spark, path)
+        listed = {d for ds in m.parts.values() for d in ds}
+        root = path.removeprefix("file://")
+        assert set(os.listdir(root)) == listed | {"_manifest"}
+        visible = [
+            f for f in os.listdir(os.path.join(root, "_manifest"))
+            if not f.startswith(".")
+        ]
+        assert visible == [f"{m.version}.json"]
+
+    return check
+
+
+@pytest.fixture
+def crash_in(monkeypatch):
+    """``with crash_in(when): op()`` — crash ``op``'s artifact commit
+    ``"before"`` the manifest create (the commit point) or ``"after"``
+    it (inside the orphan sweep), and expect ``op`` to die of it."""
+    import contextlib
+
+    from hospital_stain_tracker_data_pipeline_spark import artifacts
+
+    steps = {"before": "_create_manifest", "after": "_sweep"}
+
+    @contextlib.contextmanager
+    def ctx(when: str):
+        def boom(*_a, **_k):
+            raise RuntimeError(f"crash {when} the manifest create")
+
+        with monkeypatch.context() as mp:
+            mp.setattr(artifacts, steps[when], boom)
+            with pytest.raises(RuntimeError, match="crash"):
+                yield
+
+    return ctx

@@ -30,7 +30,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-    AFP_ALGO,
     AFP_LAGS,
     AFP_RATE,
     AFP_SEGMENTS,
@@ -40,6 +39,9 @@ from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
     dedup_audio_against_corpus,
     load_afp_index,
     save_afp_index,
+)
+from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+    save_fp_index,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.flac import encode_flac
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
@@ -332,9 +334,9 @@ def test_dedup_audio_against_corpus(spark, tmp_path):
 
 def test_afp_index_save_load_roundtrip_and_guards(spark, tmp_path):
     """The afp artifact discipline (save_phash_index pattern): the
-    revision tag rides the parquet and is validated on load; NULL
-    id/fingerprint rows drop at save; an EMPTY index round-trips via
-    the sentinel; tagless / mixed-tag / foreign-revision artifacts and
+    revision tag rides the manifest and is validated on load; NULL
+    id/fingerprint rows drop at save; an EMPTY index round-trips its
+    tag; a root without a manifest, a foreign-revision artifact and
     column-less frames fail loudly."""
     media = _media(
         spark,
@@ -354,7 +356,7 @@ def test_afp_index_save_load_roundtrip_and_guards(spark, tmp_path):
     }
     assert got == want and len(got) == 2  # NULL-fingerprint row dropped
 
-    # empty index: the tag survives the round-trip via the sentinel row
+    # empty index: the tag survives the round-trip in the manifest
     empty = str(tmp_path / "empty")
     save_afp_index(fps.filter("media_id < 0"), empty)
     assert load_afp_index(spark, empty).count() == 0
@@ -364,23 +366,15 @@ def test_afp_index_save_load_roundtrip_and_guards(spark, tmp_path):
         save_afp_index(fps.drop("afp"), str(tmp_path / "x1"))
     plain = str(tmp_path / "plain")
     fps.select("media_id", "afp").write.parquet(plain)
-    with pytest.raises(ValueError, match="_fp_tag"):
+    with pytest.raises(ValueError, match="not a committed artifact"):
         load_afp_index(spark, plain)
     foreign = str(tmp_path / "foreign")
-    fps.select("media_id", "afp").withColumn(
-        "_fp_tag", F.lit("hk-lag-v0:4000:8:1,2")
-    ).write.parquet(foreign)
+    save_fp_index(
+        fps, foreign, "hk-lag-v0:4000:8:1,2",
+        id_col="media_id", hash_col="afp",
+    )
     with pytest.raises(ValueError, match="revision"):
         load_afp_index(spark, foreign)
-    mixed = str(tmp_path / "mixed")
-    fps.select("media_id", "afp").withColumn(
-        "_fp_tag", F.lit(AFP_ALGO)
-    ).write.parquet(mixed)
-    fps.select("media_id", "afp").withColumn(
-        "_fp_tag", F.lit("hk-lag-v0:4000:8:1,2")
-    ).write.mode("append").parquet(mixed)
-    with pytest.raises(ValueError, match="mixes"):
-        load_afp_index(spark, mixed)
 
 
 def test_afp_index_append_feeds_corpus_gate(spark, tmp_path):

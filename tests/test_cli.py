@@ -528,10 +528,18 @@ def test_cli_sample_exact_and_stratified(tmp_path, spark, sf_dir):
     assert "exactly one of --k / --fraction" in bad.stderr
 
 
+def _live_manifest(root):
+    """Path of the highest-version manifest of an artifact root."""
+    return max(
+        glob.glob(f"{root}/_manifest/*.json"),
+        key=lambda p: int(os.path.basename(p).split(".")[0]),
+    )
+
+
 def test_cli_curate_run_dir_resume(tmp_path):
     """--run-dir writes stage artifacts and a rerun with the same
-    config resumes from them (identical report, upstream markers not
-    rewritten)."""
+    config resumes from them (identical report, upstream stage
+    manifests not rewritten)."""
     src = "/root/testdata/sf0.001/documents.parquet"
     run_dir = str(tmp_path / "rundir")
     args = [
@@ -552,8 +560,7 @@ def test_cli_curate_run_dir_resume(tmp_path):
         )
 
     rep1 = _report(_run(*args))
-    marker = os.path.join(run_dir, "exact_keep", "_STAGE_OK")
-    assert os.path.exists(marker)
+    marker = _live_manifest(os.path.join(run_dir, "exact_keep"))
     mtime = os.path.getmtime(marker)
 
     rep2 = _report(_run(*args))
@@ -564,6 +571,7 @@ def test_cli_curate_run_dir_resume(tmp_path):
     assert rep1.pop("hot_buckets_dropped") == "0"
     assert rep2.pop("hot_buckets_dropped") == "None"
     assert rep2 == rep1
+    assert _live_manifest(os.path.join(run_dir, "exact_keep")) == marker
     assert os.path.getmtime(marker) == mtime, (
         "exact_keep recomputed on resume — artifact should have loaded"
     )
@@ -581,7 +589,7 @@ def test_cli_ann_index_and_search(tmp_path):
         "ann_index", "--embeddings", emb, "--output", idx,
         "--clusters", "4", "--m", "8", "--codes", "16", "--iters", "1",
     )
-    assert os.path.isdir(os.path.join(idx, "codes"))
+    assert _codes_count(idx) > 0
 
     queries = str(tmp_path / "queries")
     duckdb.sql(
@@ -604,6 +612,18 @@ def test_cli_ann_index_and_search(tmp_path):
         f"FROM '{out}/*.parquet') WHERE prev > adc_dist"
     ).fetchone()[0]
     assert ordered == 0
+
+
+def _codes_count(idx):
+    """Rows of an ANN index's codes, read through its live manifest."""
+    import duckdb
+
+    with open(_live_manifest(idx)) as f:
+        dirs = json.load(f)["parts"]["codes"]
+    files = [f"{idx}/{d}/*.parquet" for d in dirs]
+    return duckdb.sql(
+        f"SELECT count(*) FROM read_parquet({files!r})"
+    ).fetchone()[0]
 
 
 def test_cli_ann_index_append(tmp_path):
@@ -630,9 +650,7 @@ def test_cli_ann_index_append(tmp_path):
         "ann_index", "--embeddings", base, "--output", idx,
         "--clusters", "4", "--m", "8", "--codes", "16", "--iters", "1",
     )
-    n0 = duckdb.sql(
-        f"SELECT count(*) FROM '{idx}/codes/*.parquet'"
-    ).fetchone()[0]
+    n0 = _codes_count(idx)
     out = _run(
         "ann_index", "--embeddings", delta, "--output", idx, "--append",
     )
@@ -645,9 +663,7 @@ def test_cli_ann_index_append(tmp_path):
     ).fetchone()[0]
     assert report["appended"] == n_delta
     assert isinstance(report["refit_recommended"], bool)
-    n1 = duckdb.sql(
-        f"SELECT count(*) FROM '{idx}/codes/*.parquet'"
-    ).fetchone()[0]
+    n1 = _codes_count(idx)
     assert n1 == n0 + n_delta
 
 
@@ -767,18 +783,14 @@ def test_cli_ann_index_drift(tmp_path):
         "ann_index", "--embeddings", emb, "--output", idx,
         "--clusters", "4", "--m", "8", "--codes", "16", "--iters", "1",
     )
-    n0 = duckdb.sql(
-        f"SELECT count(*) FROM '{idx}/codes/*.parquet'"
-    ).fetchone()[0]
+    n0 = _codes_count(idx)
     out = _run("ann_index", "--embeddings", emb, "--output", idx, "--drift")
     report = json.loads(
         [ln for ln in out.splitlines() if ln.startswith("{")][-1]
     )
     assert report["appended"] == n0  # probed the same corpus
     assert report["refit_recommended"] is False
-    n1 = duckdb.sql(
-        f"SELECT count(*) FROM '{idx}/codes/*.parquet'"
-    ).fetchone()[0]
+    n1 = _codes_count(idx)
     assert n1 == n0
 
 
@@ -796,9 +808,7 @@ def test_cli_ann_index_remove_and_compact(tmp_path):
         "ann_index", "--embeddings", emb, "--output", idx,
         "--clusters", "4", "--m", "8", "--codes", "16", "--iters", "1",
     )
-    n0 = duckdb.sql(
-        f"SELECT count(*) FROM '{idx}/codes/*.parquet'"
-    ).fetchone()[0]
+    n0 = _codes_count(idx)
     ids = str(tmp_path / "takedown")
     duckdb.sql(
         f"COPY (SELECT vec_id FROM read_parquet('{emb}') "
@@ -815,19 +825,15 @@ def test_cli_ann_index_remove_and_compact(tmp_path):
     assert rep["tombstones_total"] == n_rm
     assert rep["compact_recommended"] is True  # 1/5 >= 0.1
     # codes untouched by the tombstone write
-    assert duckdb.sql(
-        f"SELECT count(*) FROM '{idx}/codes/*.parquet'"
-    ).fetchone()[0] == n0
+    assert _codes_count(idx) == n0
 
     out = _run("ann_index", "--output", idx, "--compact")
     crep = json.loads(
         [ln for ln in out.splitlines() if ln.startswith("{")][-1]
     )
     assert crep["compacted"] is True
-    assert crep["codes_rows_after"] == n0 - n_rm
-    assert duckdb.sql(
-        f"SELECT count(*) FROM '{idx}/codes/*.parquet'"
-    ).fetchone()[0] == n0 - n_rm
+    assert crep["index_rows_after"] == n0 - n_rm
+    assert _codes_count(idx) == n0 - n_rm
 
 
 def test_cli_image_index_and_filter(tmp_path):

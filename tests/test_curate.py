@@ -4,6 +4,7 @@ invariants verified on a golden corpus and on the documents fixture."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hospital_stain_tracker_data_pipeline_spark.pipeline.curate import (
@@ -762,6 +763,15 @@ def _resume_kwargs(emb, eval_docs):
     )
 
 
+def _stage_version(spark, run, stage):
+    """The committed manifest version of one run_dir stage."""
+    from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+        load_manifest,
+    )
+
+    return load_manifest(spark, f"{run}/{stage}").version
+
+
 def _chunk_rows(chunks):
     return sorted(
         tuple(r) for r in chunks.select(sorted(chunks.columns)).collect()
@@ -808,8 +818,8 @@ def test_curate_run_dir_kill_and_resume_bit_identical(spark, tmp_path):
 
     # simulate a crash before the LAST stages completed: nuke the late
     # artifacts, keep everything upstream
-    early_markers = {
-        s: os.path.getmtime(os.path.join(run, s, "_STAGE_OK"))
+    early_versions = {
+        s: _stage_version(spark, run, s)
         for s in ("url_dedup", "source_cap", "exact_keep", "near_drop")
     }
     for late in ("probe_keep", "substring_dedup"):
@@ -823,8 +833,8 @@ def test_curate_run_dir_kill_and_resume_bit_identical(spark, tmp_path):
     assert rep_c.hot_buckets_dropped is None and rep_a.hot_buckets_dropped == 0
     assert dataclasses.replace(rep_c, hot_buckets_dropped=0) == rep_a
     unpersist_curated(chunks_c)
-    for s, t in early_markers.items():
-        assert os.path.getmtime(os.path.join(run, s, "_STAGE_OK")) == t, (
+    for s, v in early_versions.items():
+        assert _stage_version(spark, run, s) == v, (
             f"stage {s} was rewritten on resume — it should have loaded"
         )
 
@@ -837,9 +847,9 @@ def test_curate_run_dir_loads_artifacts_not_recompute(spark, tmp_path):
     recomputed. (Doctoring an EARLIER stage's ids is outside the
     store's contract: downstream artifacts are keyed by CONFIG, so a
     data-only edit upstream leaves them validly loadable.)"""
-    import os
-    import shutil
-
+    from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+        load_manifest,
+    )
     from hospital_stain_tracker_data_pipeline_spark.pipeline.curate import (
         unpersist_curated,
     )
@@ -854,14 +864,13 @@ def test_curate_run_dir_loads_artifacts_not_recompute(spark, tmp_path):
     unpersist_curated(chunks)
     victim = max(base_ids)
 
-    data = os.path.join(run, "probe_keep", "data")
+    # overwrite the committed data part in place (the manifest still
+    # lists it, so the resume must read the doctored rows)
+    [data] = load_manifest(spark, f"{run}/probe_keep").paths("data")
     doctored = spark.read.parquet(data).filter(
         F.col("doc_id") != victim
-    )
-    tmp_out = os.path.join(run, "probe_keep", "data_doctored")
-    doctored.write.parquet(tmp_out)
-    shutil.rmtree(data)
-    os.rename(tmp_out, data)
+    ).localCheckpoint(eager=True)
+    doctored.write.mode("overwrite").parquet(data)
 
     chunks2, _ = curate_documents(docs, **kw, run_dir=run)
     ids2 = {
@@ -876,8 +885,6 @@ def test_curate_run_dir_config_drift_invalidates_suffix(spark, tmp_path):
     """Changing a mid-pipeline parameter recomputes that stage and its
     downstream suffix (fresh-run-equivalent result) while upstream
     artifacts stay loaded."""
-    import os
-
     from hospital_stain_tracker_data_pipeline_spark.pipeline.curate import (
         unpersist_curated,
     )
@@ -887,9 +894,8 @@ def test_curate_run_dir_config_drift_invalidates_suffix(spark, tmp_path):
     run = str(tmp_path / "run")
     chunks, _ = curate_documents(docs, **kw, run_dir=run)
     unpersist_curated(chunks)
-    upstream_mtime = os.path.getmtime(
-        os.path.join(run, "exact_keep", "_STAGE_OK")
-    )
+    upstream_version = _stage_version(spark, run, "exact_keep")
+    near_version = _stage_version(spark, run, "near_drop")
 
     kw2 = dict(kw, near_dup_threshold=0.95)  # drops fewer near-dups
     fresh, rep_fresh = curate_documents(docs, **kw2)
@@ -900,10 +906,100 @@ def test_curate_run_dir_config_drift_invalidates_suffix(spark, tmp_path):
     assert _chunk_rows(resumed) == rows_fresh
     assert rep_resumed == rep_fresh
     unpersist_curated(resumed)
-    assert (
-        os.path.getmtime(os.path.join(run, "exact_keep", "_STAGE_OK"))
-        == upstream_mtime
-    ), "upstream stage should have been loaded, not rewritten"
+    assert _stage_version(spark, run, "exact_keep") == upstream_version, (
+        "upstream stage should have been loaded, not rewritten"
+    )
+    assert _stage_version(spark, run, "near_drop") == near_version + 1
+
+
+def test_curate_file_uri_run_dir_resumes_from_another_cwd(
+    spark, tmp_path, monkeypatch
+):
+    """Regression: a ``file:`` URI run_dir commits every stage beside
+    its data (the stage marker used to land under ``<cwd>/file:/…``),
+    so a resume from a different working directory loads the completed
+    stages instead of recomputing them."""
+    import dataclasses
+
+    from hospital_stain_tracker_data_pipeline_spark.pipeline import curate
+    from hospital_stain_tracker_data_pipeline_spark.pipeline.curate import (
+        unpersist_curated,
+    )
+
+    run = "file://" + str(tmp_path / "run")
+    (tmp_path / "cwd_a").mkdir()
+    (tmp_path / "cwd_b").mkdir()
+    monkeypatch.chdir(tmp_path / "cwd_a")
+    chunks, rep = curate_documents(
+        _corpus(spark), budget=16, n_shards=2, run_dir=run
+    )
+    rows = _chunk_rows(chunks)
+    unpersist_curated(chunks)
+    assert list((tmp_path / "cwd_a").iterdir()) == []
+    versions = {
+        s: _stage_version(spark, run, s) for s in ("exact_keep", "near_drop")
+    }
+
+    def _never(*_a, **_k):
+        raise AssertionError("a completed stage was recomputed")
+
+    monkeypatch.chdir(tmp_path / "cwd_b")
+    monkeypatch.setattr(curate, "minhash_lsh_dedup_pairs", _never)
+    chunks2, rep2 = curate_documents(
+        _corpus(spark), budget=16, n_shards=2, run_dir=run
+    )
+    assert _chunk_rows(chunks2) == rows
+    # the near-dup stage loaded: no execution telemetry, same data
+    assert rep2.hot_buckets_dropped is None
+    assert dataclasses.replace(rep2, hot_buckets_dropped=0) == (
+        dataclasses.replace(rep, hot_buckets_dropped=0)
+    )
+    unpersist_curated(chunks2)
+    for s, v in versions.items():
+        assert _stage_version(spark, run, s) == v
+
+
+@pytest.mark.parametrize("scheme", ["plain", "uri"])
+def test_curate_stage_crash_matrix(
+    spark, tmp_path, crash_in, assert_no_orphans, scheme
+):
+    """One curate stage crashed before its manifest create (the rerun
+    recomputes it) and after it (the rerun loads it); the next commit
+    leaves no orphan dirs."""
+    from hospital_stain_tracker_data_pipeline_spark.pipeline.curate import (
+        _StageStore,
+    )
+
+    calls = []
+
+    def compute(ids):
+        def run():
+            calls.append(ids)
+            return spark.createDataFrame(
+                [(i,) for i in ids], "doc_id long"
+            )
+
+        return run
+
+    def stage(run_dir, params, ids):
+        df = _StageStore(spark, run_dir).load_or("keep", params, compute(ids))
+        return sorted(r["doc_id"] for r in df.collect())
+
+    for when in ("before", "after"):
+        run_dir = str(tmp_path / f"run_{when}")
+        if scheme == "uri":
+            run_dir = "file://" + run_dir
+        assert stage(run_dir, {"v": 1}, [1, 2]) == [1, 2]
+        with crash_in(when):
+            stage(run_dir, {"v": 2}, [3])
+        calls.clear()
+        # rerun the crashed config: recomputed only if the crash came
+        # before the commit point
+        assert stage(run_dir, {"v": 2}, [3]) == [3]
+        assert calls == ([[3]] if when == "before" else [])
+        # the next commit sweeps whatever the crash left behind
+        assert stage(run_dir, {"v": 3}, [4]) == [4]
+        assert_no_orphans(f"{run_dir}/keep")
 
 
 def test_predicate_sig_is_stable_and_binder_scoped(spark):

@@ -2301,8 +2301,8 @@ def test_dedup_index_artifact_roundtrip_and_guards(spark, tmp_path):
     the artifact (k is NOT recoverable from the signatures — the
     runtime length probe only catches num_hashes), params round-trip,
     a probe via the loaded params equals a direct call, legacy plain
-    parquet / mixed params / bad params fail loudly, NULL-sig and
-    NULL-id rows drop, an empty index round-trips via the sentinel."""
+    parquet / bad params fail loudly, NULL-sig and NULL-id rows drop,
+    an empty index round-trips its params (they live in the manifest)."""
     import pytest as _pytest
     from pyspark.sql import functions as F
 
@@ -2349,14 +2349,14 @@ def test_dedup_index_artifact_roundtrip_and_guards(spark, tmp_path):
     )
     assert via_artifact == direct == [11]
 
-    # empty index round-trips its params via the sentinel
+    # empty index round-trips its params through the manifest
     empty = str(tmp_path / "empty")
     save_dedup_index(idx.filter("doc_id < 0"), 32, 3, empty)
     e, nh, kk = load_dedup_index(spark, empty)
     assert (nh, kk, e.count()) == (32, 3, 0)
 
     # guards
-    with _pytest.raises(ValueError, match="not a save_dedup_index"):
+    with _pytest.raises(ValueError, match="not a committed artifact"):
         load_dedup_index(
             spark, _plain_parquet(spark, idx, str(tmp_path / "plain"))
         )
@@ -2368,12 +2368,6 @@ def test_dedup_index_artifact_roundtrip_and_guards(spark, tmp_path):
     # (recording a wrong value would poison every later probe)
     with _pytest.raises(ValueError, match="was declared"):
         save_dedup_index(idx, 8, 2, str(tmp_path / "x3"))
-    save_dedup_index(idx, 16, 4, str(tmp_path / "mix"))  # k differs
-    spark.read.parquet(path).write.mode("append").parquet(
-        str(tmp_path / "mix")
-    )
-    with _pytest.raises(ValueError, match="mixes"):
-        load_dedup_index(spark, str(tmp_path / "mix"))
 
     # the id column name rides the artifact: a url-keyed index loads
     # without the caller re-supplying id_col
@@ -2402,3 +2396,32 @@ def test_dedup_index_artifact_roundtrip_and_guards(spark, tmp_path):
 def _plain_parquet(spark, idx, path):
     idx.write.parquet(path)
     return path
+
+
+def test_cc_max_iter_zero_degenerate_graphs_still_converge(spark):
+    """max_iter=0 semantics are the identity-init ones (pre-round-14):
+    the single available round is the PROOF round, so an empty or
+    self-loop-only edge set converges (labels are already the fixpoint)
+    while any real edge still raises. The round-14 fused first round
+    must not consume that proof round."""
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        connected_components_min_label,
+    )
+
+    empty = spark.createDataFrame([], "src long, dst long")
+    tel: dict = {}
+    out = connected_components_min_label(empty, max_iter=0, telemetry=tel)
+    assert out.count() == 0 and tel["converged"]
+
+    loops = spark.createDataFrame([(5, 5), (9, 9)], "src long, dst long")
+    tel = {}
+    out = connected_components_min_label(loops, max_iter=0, telemetry=tel)
+    assert {(r["node"], r["cluster_id"]) for r in out.collect()} == {
+        (5, 5),
+        (9, 9),
+    }
+    assert tel["converged"] and tel["iterations"] == 1
+
+    edge = spark.createDataFrame([(1, 2)], "src long, dst long")
+    with pytest.raises(ValueError, match="did not converge"):
+        connected_components_min_label(edge, max_iter=0)

@@ -377,9 +377,9 @@ def test_stream_image_dedup_ingest(spark, tmp_path):
 
 def test_phash_index_save_load_roundtrip_and_guards(spark, tmp_path):
     """The phash artifact discipline (save_cms_sketch pattern): params
-    ride the parquet and come back from load; NULL-hash rows drop at
-    save; an EMPTY index round-trips via the sentinel; parameterless /
-    mixed-param artifacts and bad params fail loudly."""
+    ride the manifest and come back from load; NULL-hash rows drop at
+    save; an EMPTY index round-trips its params; a root without a
+    manifest and bad params fail loudly."""
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
         load_phash_index,
         save_phash_index,
@@ -402,7 +402,7 @@ def test_phash_index_save_load_roundtrip_and_guards(spark, tmp_path):
     }
     assert got == want and len(got) == 4  # NULL-hash row dropped
 
-    # empty index: params survive the round-trip via the sentinel row
+    # empty index: params survive the round-trip in the manifest
     empty = str(tmp_path / "empty")
     save_phash_index(hashes.filter("media_id < 0"), "dhash", 8, empty)
     idx2, algo2, hs2 = load_phash_index(spark, empty)
@@ -419,18 +419,10 @@ def test_phash_index_save_load_roundtrip_and_guards(spark, tmp_path):
         )
     plain = str(tmp_path / "plain")
     hashes.select("media_id", "phash").write.parquet(plain)
-    with pytest.raises(ValueError, match="not a save_phash_index"):
+    with pytest.raises(ValueError, match="not a committed artifact"):
         load_phash_index(spark, plain)
-    # mixed parameter sets = corrupt artifact
-    save_phash_index(hashes, "dhash", 8, str(tmp_path / "mix"))
-    spark.read.parquet(path).write.mode("append").parquet(
-        str(tmp_path / "mix")
-    )
-    with pytest.raises(ValueError, match="mixes"):
-        load_phash_index(spark, str(tmp_path / "mix"))
 
-    # NULL-id rows drop at SAVE (the loader treats NULL id as the
-    # empty-index sentinel — persisting them would lose hashes on load)
+    # NULL-id rows drop at SAVE (an id-less hash anchors no verdict)
     with_null_id = hashes.unionByName(
         hashes.limit(1).select(
             F.lit(None).cast("long").alias("media_id"),
@@ -458,7 +450,7 @@ def test_phash_index_save_load_roundtrip_and_guards(spark, tmp_path):
     assert n_app == 1
     idx3, algo3, hs3 = load_phash_index(spark, path)
     assert (algo3, hs3, idx3.count()) == ("ahash", 4, 5)
-    with pytest.raises(ValueError, match="not a save_phash_index"):
+    with pytest.raises(ValueError, match="not a committed artifact"):
         append_phash_index(spark, plain, hashes)
     with pytest.raises(ValueError, match="lacks column"):
         append_phash_index(spark, path, hashes.drop("phash"))

@@ -33,7 +33,7 @@ def test_operator_surface_exports():
         "write_packed_corpus", "shard_manifest", "verify_packed_corpus",
         "bm25_topk", "bm25_bulk_scores",
         "build_bm25_index", "dedup_substrings", "ngram_contamination",
-        "pagerank", "save_ivf_index", "load_ivf_index",
+        "save_ivf_index", "load_ivf_index",
         "pq_fit_codebooks", "pq_encode", "pq_decode", "knn_pq",
         "knn_ivf_pq", "pack_codes", "unpack_codes",
         "save_pq_index", "load_pq_index",
@@ -51,6 +51,7 @@ def test_operator_surface_exports():
         "video_phash", "video_dup_pairs", "dedup_videos_against_corpus",
         "save_vhash_index", "load_vhash_index", "append_vhash_index",
         "save_fp_index", "load_fp_index", "append_fp_index",
+        "remove_from_index", "compact_index",
         "classify_media", "sniff_pdf", "extract_pdf_text",
         "build_simple_pdf",
     ):

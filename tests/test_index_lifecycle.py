@@ -1,16 +1,18 @@
-"""Deletion lifecycle for the fingerprint indexes (round 12).
+"""Deletion lifecycle and commit protocol for the persisted indexes.
 
-The ANN index got tombstones + deferred compaction in round 11
-(`pq.remove_from_ann_index`); these pins give the four fingerprint
-tiers — text MinHash, image phash, audio afp, video vhash — the same
-takedown semantics via the generic engine in `operators/dedup.py`:
+Every index kind — ANN, text MinHash, image phash, audio afp, video
+vhash — commits through the versioned manifest in `artifacts.py` and
+shares one tombstone engine (`remove_from_index` / `compact_index`):
 
 - remove-then-probe == probe-against-rebuilt-without-ids, per tier;
 - the tombstone-vs-reappend contract (a tombstone suppresses its id
   even if re-appended; compaction clears the way);
-- torn / wrong-family artifacts reject removal with nothing written;
+- a root without a manifest rejects removal with nothing written;
 - compaction is threshold-gated, count-validated, and changes storage
   but never probe results;
+- a crash before the manifest create leaves the previous version
+  live, a crash after it the new one, and the next commit sweeps the
+  leftovers — on a plain path and on a ``file:`` URI;
 - the CLI exposes --remove / --compact on every *_index command.
 """
 
@@ -23,15 +25,16 @@ import sys
 import pytest
 from pyspark.sql import functions as F
 
+from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+    compact_index,
+    load_manifest,
+    remove_from_index,
+)
 from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-    compact_dedup_index,
-    compact_fp_index,
     dedup_against_corpus,
     load_dedup_index,
     load_fp_index,
     minhash_signature_index,
-    remove_from_dedup_index,
-    remove_from_fp_index,
     append_fp_index,
     save_dedup_index,
     save_fp_index,
@@ -62,6 +65,10 @@ def _probe_ids(probe, index):
     )
 
 
+def _tombstoned(spark, path) -> bool:
+    return bool(load_manifest(spark, path).parts["tombstones"])
+
+
 def test_fp_remove_then_probe_equals_rebuild(spark, tmp_path):
     """The core takedown contract on the generic tagged artifact:
     after remove(ids), every probe behaves exactly as if the index had
@@ -75,7 +82,7 @@ def test_fp_remove_then_probe_equals_rebuild(spark, tmp_path):
     idx, _ = load_fp_index(spark, path, TAG)
     assert len(_probe_ids(probe, idx)) == 8
 
-    report = remove_from_fp_index(spark, path, _ids(spark, [2, 5]), TAG)
+    report = remove_from_index(spark, path, _ids(spark, [2, 5]))
     assert report["requested"] == 2
     assert report["tombstones_total"] == 2
     assert report["index_rows"] == 8  # physical rows untouched
@@ -97,15 +104,16 @@ def test_fp_tombstone_suppresses_reappend_until_compact(spark, tmp_path):
     becomes visible."""
     path = str(tmp_path / "fp")
     save_fp_index(_fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, TAG)
-    remove_from_fp_index(spark, path, _ids(spark, [3]), TAG)
+    remove_from_index(spark, path, _ids(spark, [3]))
     # re-append id 3: still suppressed (tombstone wins)
     append_fp_index(spark, path, _fp_frame(spark, [(3, 48)]), TAG)
     idx, _ = load_fp_index(spark, path, TAG)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 2]
 
-    rep = compact_fp_index(spark, path, TAG, force=True)
+    rep = compact_index(spark, path, force=True)
     assert rep["compacted"] is True
     assert rep["folded_tombstones"] == 1
+    assert (rep["appends"], rep["removes"], rep["compactions"]) == (1, 1, 1)
     # both physical rows for id 3 folded away
     idx, _ = load_fp_index(spark, path, TAG)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 2]
@@ -117,23 +125,30 @@ def test_fp_tombstone_suppresses_reappend_until_compact(spark, tmp_path):
 
 
 def test_fp_remove_rejects_torn_and_wrong_tag(spark, tmp_path):
-    """Removal validates the artifact FIRST: a plain parquet (no tag)
-    and a wrong-family tag both reject with no tombstone written."""
+    """A root without a manifest (a plain parquet) rejects removal
+    with nothing written; a wrong-family tag rejects at load and
+    append; the ids frame must carry the recorded id column."""
     plain = str(tmp_path / "plain")
     _fp_frame(spark, [(1, 16)]).write.parquet(plain)
-    with pytest.raises(ValueError, match="_fp_tag"):
-        remove_from_fp_index(spark, plain, _ids(spark, [1]), TAG)
-    assert not os.path.isdir(plain + "_tombstones")
+    with pytest.raises(ValueError, match="not a committed artifact"):
+        remove_from_index(spark, plain, _ids(spark, [1]))
+    assert load_manifest(spark, plain) is None
+    assert not any(
+        f.startswith(("_manifest", "tombstones")) for f in os.listdir(plain)
+    )
 
     path = str(tmp_path / "fp")
     save_fp_index(_fp_frame(spark, [(1, 16)]), path, TAG)
     with pytest.raises(ValueError, match="tag"):
-        remove_from_fp_index(spark, path, _ids(spark, [1]), "other-v9")
-    assert not os.path.isdir(path + "_tombstones")
+        load_fp_index(spark, path, "other-v9")
+    with pytest.raises(ValueError, match="tag"):
+        append_fp_index(spark, path, _fp_frame(spark, [(2, 32)]), "other-v9")
+    assert load_manifest(spark, path).version == 1  # nothing committed
     # the ids frame must carry the index's id column
     bad = spark.createDataFrame([(1,)], "wrong_col long")
     with pytest.raises(ValueError, match="media_id"):
-        remove_from_fp_index(spark, path, bad, TAG)
+        remove_from_index(spark, path, bad)
+    assert not _tombstoned(spark, path)
 
 
 def test_fp_compact_threshold_gating_and_report(spark, tmp_path):
@@ -144,21 +159,21 @@ def test_fp_compact_threshold_gating_and_report(spark, tmp_path):
     save_fp_index(
         _fp_frame(spark, [(i, i * 16) for i in range(1, 21)]), path, TAG
     )
-    remove_from_fp_index(spark, path, _ids(spark, [7]), TAG)  # 5% ratio
-    rep = compact_fp_index(spark, path, TAG, min_ratio=0.1)
+    remove_from_index(spark, path, _ids(spark, [7]))  # 5% ratio
+    rep = compact_index(spark, path, min_ratio=0.1)
     assert rep["compacted"] is False and "min_ratio" in rep["reason"]
-    assert os.path.isdir(path + "_tombstones")
+    assert _tombstoned(spark, path)
 
-    rep = compact_fp_index(spark, path, TAG, min_ratio=0.1, force=True)
+    rep = compact_index(spark, path, min_ratio=0.1, force=True)
     assert rep["compacted"] is True
     assert rep["index_rows_before"] == 20
     assert rep["index_rows_after"] == 19
-    assert not os.path.isdir(path + "_tombstones")
-    # the artifact survives the swap intact (tag + sentinel + rows)
+    assert not _tombstoned(spark, path)
+    # the compacted version keeps its tag and rows
     idx, tag = load_fp_index(spark, path, TAG)
     assert tag == TAG and idx.count() == 19
     # compacting again: nothing to do
-    rep = compact_fp_index(spark, path, TAG, force=True)
+    rep = compact_index(spark, path, force=True)
     assert rep["compacted"] is False and rep["reason"] == "no tombstones"
 
 
@@ -184,7 +199,7 @@ def test_minhash_remove_then_probe_equals_rebuild(spark, tmp_path):
     kept = dedup_against_corpus(batch, index, threshold=0.5, num_hashes=nh, k=k)
     assert kept.count() == 0  # near-dups corpus doc 2 -> dropped
 
-    rep = remove_from_dedup_index(spark, path, _ids2(spark, [2]))
+    rep = remove_from_index(spark, path, _ids2(spark, [2]))
     assert rep["requested"] == 1 and rep["tombstones_total"] == 1
     index, nh, k = load_dedup_index(spark, path)
     kept = dedup_against_corpus(batch, index, threshold=0.5, num_hashes=nh, k=k)
@@ -206,7 +221,7 @@ def test_minhash_remove_then_probe_equals_rebuild(spark, tmp_path):
         r["doc_id"] for r in kept_rb.collect()
     )
 
-    rep = compact_dedup_index(spark, path, force=True)
+    rep = compact_index(spark, path, force=True)
     assert rep["compacted"] is True and rep["index_rows_after"] == 2
     index, nh, k = load_dedup_index(spark, path)
     assert index.count() == 2
@@ -220,9 +235,7 @@ def test_phash_remove_and_compact(spark, tmp_path):
     """Image tier: the phash artifact (its own two-parameter format)
     rides the same lifecycle engine."""
     from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        compact_phash_index,
         load_phash_index,
-        remove_from_phash_index,
         save_phash_index,
     )
 
@@ -231,25 +244,28 @@ def test_phash_remove_and_compact(spark, tmp_path):
     )
     path = str(tmp_path / "ph")
     save_phash_index(hashes, "dhash", 8, path)
-    rep = remove_from_phash_index(spark, path, _ids(spark, [2]))
+    rep = remove_from_index(spark, path, _ids(spark, [2]))
     assert rep["tombstones_total"] == 1
     idx, algo, hs = load_phash_index(spark, path)
     assert (algo, hs) == ("dhash", 8)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 3]
-    rep = compact_phash_index(spark, path, force=True)
+    rep = compact_index(spark, path, force=True)
     assert rep["compacted"] is True
     idx, _, _ = load_phash_index(spark, path)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 3]
 
 
-def test_audio_video_tier_wrappers(spark, tmp_path):
-    """Audio/video tiers: the thin wrappers remove under the module's
-    own tag and reject a foreign artifact."""
+def test_audio_video_tiers_share_the_lifecycle(spark, tmp_path):
+    """Audio/video tiers: their artifacts ride the generic lifecycle
+    under the manifest's id column, and a video artifact never loads
+    as an audio index (wrong family)."""
     from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        compact_afp_index,
         load_afp_index,
-        remove_from_afp_index,
         save_afp_index,
+    )
+    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
+        load_vhash_index,
+        save_vhash_index,
     )
 
     fps = spark.createDataFrame(
@@ -257,33 +273,25 @@ def test_audio_video_tier_wrappers(spark, tmp_path):
     )
     apath = str(tmp_path / "afp")
     save_afp_index(fps, apath)
-    rep = remove_from_afp_index(spark, apath, _ids(spark, [1]))
+    rep = remove_from_index(spark, apath, _ids(spark, [1]))
     assert rep["tombstones_total"] == 1
     assert [r["media_id"] for r in load_afp_index(spark, apath).collect()] == [2]
-    assert compact_afp_index(spark, apath, force=True)["compacted"] is True
+    assert compact_index(spark, apath, force=True)["compacted"] is True
     assert [r["media_id"] for r in load_afp_index(spark, apath).collect()] == [2]
-
-    # a video artifact rejects the audio tier's remove (wrong family)
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        compact_vhash_index,
-        load_vhash_index,
-        remove_from_vhash_index,
-        save_vhash_index,
-    )
 
     vpath = str(tmp_path / "vh")
     vh = spark.createDataFrame(
         [(1, 11), (2, 22)], "media_id long, vhash long"
     )
     save_vhash_index(vh, vpath, "dhash", 4, 3)
-    with pytest.raises(ValueError):
-        remove_from_afp_index(spark, vpath, _ids(spark, [1]))
-    rep = remove_from_vhash_index(spark, vpath, _ids(spark, [2]))
+    with pytest.raises(ValueError, match="tag"):
+        load_afp_index(spark, vpath)
+    rep = remove_from_index(spark, vpath, _ids(spark, [2]))
     assert rep["tombstones_total"] == 1
     idx, algo, hs, ns = load_vhash_index(spark, vpath)
     assert (algo, hs, ns) == ("dhash", 4, 3)
     assert [r["media_id"] for r in idx.collect()] == [1]
-    assert compact_vhash_index(spark, vpath, force=True)["compacted"] is True
+    assert compact_index(spark, vpath, force=True)["compacted"] is True
     assert [r["media_id"] for r in load_vhash_index(spark, vpath)[0].collect()] == [1]
 
 
@@ -357,18 +365,18 @@ def test_cli_index_remove_and_compact(tmp_path):
 
 
 def test_rebuild_clears_stale_tombstones(spark, tmp_path):
-    """Regression (round-12 review): tombstones live in a SIBLING dir,
-    so a full rebuild via save_*_index must clear them — otherwise a
-    legitimately-present id in the brand-new index stays suppressed
-    forever (and a later compact physically deletes it)."""
+    """Regression (round-12 review): a full rebuild via save_*_index
+    must start without tombstones — otherwise a legitimately-present
+    id in the brand-new index stays suppressed forever (and a later
+    compact physically deletes it)."""
     path = str(tmp_path / "fp")
     save_fp_index(_fp_frame(spark, [(1, 16), (2, 32)]), path, TAG)
-    remove_from_fp_index(spark, path, _ids(spark, [2]), TAG)
-    assert os.path.isdir(path + "_tombstones")
+    remove_from_index(spark, path, _ids(spark, [2]))
+    assert _tombstoned(spark, path)
 
     # nightly rebuild: id 2 is legitimately in the fresh corpus
     save_fp_index(_fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, TAG)
-    assert not os.path.isdir(path + "_tombstones")
+    assert not _tombstoned(spark, path)
     idx, _ = load_fp_index(spark, path, TAG)
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 2, 3]
 
@@ -380,7 +388,7 @@ def test_rebuild_clears_stale_tombstones(spark, tmp_path):
         "doc_id long, text string",
     )
     save_dedup_index(minhash_signature_index(docs), 32, 3, mh)
-    remove_from_dedup_index(spark, mh, _ids2(spark, [2]))
+    remove_from_index(spark, mh, _ids2(spark, [2]))
     save_dedup_index(minhash_signature_index(docs), 32, 3, mh)
     assert load_dedup_index(spark, mh)[0].count() == 2
 
@@ -394,12 +402,12 @@ def test_remove_casts_ids_to_index_type(spark, tmp_path):
     save_fp_index(
         _fp_frame(spark, [(1, 16), (2, 32), (3, 48)]), path, TAG
     )
-    remove_from_fp_index(spark, path, _ids(spark, [1]), TAG)  # long ids
+    remove_from_index(spark, path, _ids(spark, [1]))  # long ids
     ints = spark.createDataFrame([(2,)], "media_id int")  # int32 ids
-    remove_from_fp_index(spark, path, ints, TAG)
+    remove_from_index(spark, path, ints)
     idx, _ = load_fp_index(spark, path, TAG)  # must not raise
     assert sorted(r["media_id"] for r in idx.collect()) == [3]
-    rep = compact_fp_index(spark, path, TAG, force=True)
+    rep = compact_index(spark, path, force=True)
     assert rep["compacted"] is True and rep["index_rows_after"] == 1
 
 
@@ -415,13 +423,12 @@ def test_index_fsck_all_kinds(spark, tmp_path):
     )
     from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
         build_ann_index,
-        remove_from_ann_index,
     )
 
     # generic fp artifact, one tombstone
     fp = str(tmp_path / "fp")
     save_fp_index(_fp_frame(spark, [(1, 16), (2, 32)]), fp, TAG)
-    remove_from_fp_index(spark, fp, _ids(spark, [2]), TAG)
+    remove_from_index(spark, fp, _ids(spark, [2]))
     rep = index_fsck(spark, fp)
     assert rep["ok"] and rep["kind"] == "fp_tagged"
     assert rep["meta"]["tag"] == TAG
@@ -456,85 +463,91 @@ def test_index_fsck_all_kinds(spark, tmp_path):
     )
     ann = str(tmp_path / "ann")
     build_ann_index(emb, ann, n_clusters=2, m=2, n_codes=4, iters=1)
-    remove_from_ann_index(spark, ann, spark.createDataFrame([(3,)], "vec_id long"))
+    remove_from_index(spark, ann, spark.createDataFrame([(3,)], "vec_id long"))
     rep = index_fsck(spark, ann)
     assert rep["ok"] and rep["kind"] == "ann_ivf_pq"
     assert rep["meta"]["id_col"] == "vec_id"
     assert rep["rows"] == 24 and rep["tombstones"] == 1
+    assert rep["live_rows"] == 23 and rep["version"] == 2
 
     # broken artifacts REPORT, never raise
     plain = str(tmp_path / "plain")
     _fp_frame(spark, [(1, 16)]).write.parquet(plain)
     rep = index_fsck(spark, plain)
-    assert rep["ok"] is False and "not a persisted index" in rep["error"]
+    assert rep["ok"] is False and "not a committed artifact" in rep["error"]
 
-    # stale swap dir flips ok to False with an actionable error
-    os.makedirs(fp + "_compacting", exist_ok=True)
-    rep = index_fsck(spark, fp)
-    assert rep["ok"] is False and "_compacting" in rep["error"]
-    os.rmdir(fp + "_compacting")
-
-    # torn ANN (marker gone) reports too
-    os.remove(os.path.join(ann, "_INDEX_OK"))
-    rep = index_fsck(spark, ann)
-    assert rep["ok"] is False and "_INDEX_OK missing" in rep["error"]
-
-
-def test_swap_crash_recovery_protects_last_copy(spark, tmp_path):
-    """Compact's two-rename swap window (index path missing, last copy
-    in `<path>_old` / `<path>_compacting`): recover_index_swap renames
-    the right copy back, clear_index_lifecycle_state REFUSES to delete
-    the survivors while the path is absent (a rebuild must not destroy
-    the only copy), and index_fsck names the state + the fix instead of
-    a generic read failure."""
+    # an ANN root whose manifest is gone reports the same way
     import shutil
 
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        clear_index_lifecycle_state,
-        index_fsck,
-        recover_index_swap,
-    )
+    shutil.rmtree(os.path.join(ann, "_manifest"))
+    rep = index_fsck(spark, ann)
+    assert rep["ok"] is False and "not a committed artifact" in rep["error"]
 
-    rows = [(i, i * 16) for i in range(1, 9)]
-    path = str(tmp_path / "fp")
-    save_fp_index(_fp_frame(spark, rows), path, TAG)
-    remove_from_fp_index(spark, path, _ids(spark, [2]), TAG)
 
-    # healthy artifact: recovery is a no-op
-    assert recover_index_swap(path)["recovered"] is False
+@pytest.mark.parametrize("scheme", ["plain", "uri"])
+def test_fp_crash_matrix(
+    spark, tmp_path, crash_in, assert_no_orphans, scheme
+):
+    """Save-over-existing, append, remove and compact of a fingerprint
+    index, each crashed before the manifest create (the previous
+    version stays live) and after it (the new version is live). After
+    every crash the next commit leaves no orphan dirs."""
+    base = [(1, 16), (2, 32), (3, 48)]
+    ops = {
+        "save": lambda p: save_fp_index(
+            _fp_frame(spark, [(4, 64), (5, 80)]), p, TAG
+        ),
+        "append": lambda p: append_fp_index(
+            spark, p, _fp_frame(spark, [(9, 144)]), TAG
+        ),
+        "remove": lambda p: remove_from_index(spark, p, _ids(spark, [2])),
+        "compact": lambda p: compact_index(spark, p, force=True),
+    }
+    # (live ids, tombstones listed) before and after the commit point
+    expect = {
+        "save": (([1, 2, 3], False), ([4, 5], False)),
+        "append": (([1, 2, 3], False), ([1, 2, 3, 9], False)),
+        "remove": (([1, 2, 3], False), ([1, 3], True)),
+        "compact": (([1, 3], True), ([1, 3], False)),
+    }
+    for op, run in ops.items():
+        for when in ("before", "after"):
+            path = str(tmp_path / f"{op}_{when}")
+            if scheme == "uri":
+                path = "file://" + path
+            save_fp_index(_fp_frame(spark, base), path, TAG)
+            if op == "compact":
+                remove_from_index(spark, path, _ids(spark, [2]))
+            with crash_in(when):
+                run(path)
+            ids, tombs = expect[op][when == "after"]
+            idx, _ = load_fp_index(spark, path, TAG)
+            assert sorted(r["media_id"] for r in idx.collect()) == ids, (
+                op, when,
+            )
+            assert _tombstoned(spark, path) == tombs, (op, when)
+            # the next commit sweeps whatever the crash left behind
+            append_fp_index(spark, path, _fp_frame(spark, [(7, 112)]), TAG)
+            assert_no_orphans(path)
+            idx, _ = load_fp_index(spark, path, TAG)
+            assert sorted(r["media_id"] for r in idx.collect()) == sorted(
+                ids + [7]
+            )
 
-    # simulate a crash between rename(p, old) and rename(compacting, p):
-    # _compacting holds the validated post-fold copy, _old the pre-fold
-    shutil.copytree(path, path + "_compacting")
-    os.rename(path, path + "_old")
 
-    rep = index_fsck(spark, path)
-    assert rep["ok"] is False and rep["kind"] == "crashed_swap"
-    assert "recover_index_swap" in rep["error"]
-
-    with pytest.raises(ValueError, match="recover_index_swap"):
-        clear_index_lifecycle_state(path)
-    assert os.path.isdir(path + "_old")  # refusal deleted nothing
-
-    got = recover_index_swap(path)
-    assert got == {"recovered": True, "from": "compacting", "path": path}
-    # post-fold copy restored, siblings and (already-folded) tombstones gone
-    assert os.path.isdir(path)
-    assert not os.path.isdir(path + "_old")
-    assert not os.path.isdir(path + "_compacting")
-    assert not os.path.isdir(path + "_tombstones")
+def test_fp_takedown_through_file_uri(spark, tmp_path):
+    """Regression: a takedown addressed by a ``file:`` URI tombstones
+    the id beside the index and the id stops loading (the tombstone
+    check used to look for a relative ``file:`` dir and miss it)."""
+    path = "file://" + str(tmp_path / "fp")
+    save_fp_index(_fp_frame(spark, [(1, 16), (2, 32)]), path, TAG)
+    rep = remove_from_index(spark, path, _ids(spark, [2]))
+    assert rep["tombstones_total"] == 1
     idx, _ = load_fp_index(spark, path, TAG)
-    assert idx.count() == 8  # copytree predates the fold in this rig
-
-    # crash window BEFORE compacting existed (only _old survives):
-    os.rename(path, path + "_old")
-    got = recover_index_swap(path)
-    assert got == {"recovered": True, "from": "old", "path": path}
-    assert load_fp_index(spark, path, TAG)[0].count() == 8
-
-    # nothing anywhere → honest report, no raise
-    empty = str(tmp_path / "nothing")
-    assert recover_index_swap(empty)["recovered"] is False
+    assert [r["media_id"] for r in idx.collect()] == [1]
+    # the same artifact read through its plain path agrees
+    idx, _ = load_fp_index(spark, str(tmp_path / "fp"), TAG)
+    assert [r["media_id"] for r in idx.collect()] == [1]
 
 
 def test_index_fsck_covers_every_save_writer(spark, tmp_path):

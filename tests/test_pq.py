@@ -10,6 +10,11 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+    compact_index,
+    load_manifest,
+    remove_from_index,
+)
 from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
     knn_ivf_pq,
     knn_pq,
@@ -36,6 +41,17 @@ def emb(spark, sf_dir):
 @pytest.fixture(scope="module")
 def codebooks(spark, emb):
     return pq_fit_codebooks(emb, m=8, n_codes=16, iters=2)
+
+
+def _codes(spark, idx):
+    """The committed codes rows of an ANN index (tombstones included)."""
+    return load_manifest(spark, idx).read(spark, "codes")
+
+
+def _part(spark, idx, part):
+    """The one dir a committed ANN index lists for ``part``."""
+    [path] = load_manifest(spark, idx).paths(part)
+    return path
 
 
 def _np_quantize(vecs: np.ndarray) -> np.ndarray:
@@ -314,28 +330,21 @@ def test_ann_index_build_search_matches_in_process(spark, emb, tmp_path):
     ext = search_ann_index(spark, idx, q, k=5, nprobe=2)
     assert ext.filter(F.col("query_id") == F.col("vec_id")).count() == 4
 
-    # a non-artifact codes dir fails loudly
+    # a plain codes parquet (no manifest) fails loudly
     import pytest as _pytest
 
     bad = str(tmp_path / "bad")
-    build_ann_index(emb, bad, **params)
-    spark.read.parquet(f"{bad}/codes").drop("cell").write.mode(
-        "overwrite"
-    ).parquet(f"{bad}/codes2")
-    import shutil
-
-    shutil.rmtree(f"{bad}/codes")
-    shutil.move(f"{bad}/codes2", f"{bad}/codes")
-    with _pytest.raises(ValueError, match="expected"):
+    _codes(spark, idx).write.parquet(bad)
+    with _pytest.raises(ValueError, match="not a committed artifact"):
         search_ann_index(spark, bad, q)
 
 
 def test_ann_index_torn_artifact_rejected(spark, emb, tmp_path):
-    """The three ANN sub-artifacts are mutually dependent; a build
-    that did not reach the _INDEX_OK marker (crash mid-rebuild) must
+    """The ANN sub-artifacts are mutually dependent; a root without a
+    committed manifest (a build that never reached its commit) must
     be rejected loudly, not served as a silently-wrong ivf/pq/codes
     mix (round-9 review)."""
-    import os
+    import shutil
 
     import pytest as _pytest
 
@@ -349,8 +358,8 @@ def test_ann_index_torn_artifact_rejected(spark, emb, tmp_path):
     q = emb.limit(1).select(F.col("vec_id").alias("query_id"), "embedding")
     assert search_ann_index(spark, idx, q, k=3, nprobe=2).count() == 3
 
-    os.remove(os.path.join(idx, "_INDEX_OK"))
-    with _pytest.raises(ValueError, match="_INDEX_OK"):
+    shutil.rmtree(f"{idx}/_manifest")
+    with _pytest.raises(ValueError, match="not a committed artifact"):
         search_ann_index(spark, idx, q)
 
 
@@ -385,11 +394,11 @@ def test_ann_index_append_equals_full_encode(spark, emb, tmp_path):
     # overwritten with a full encode of base ∪ delta under those fits
     full = str(tmp_path / "full")
     build_ann_index(base, full, **params)
-    cents = load_ivf_index(spark, f"{full}/ivf")
-    cb = load_pq_index(spark, f"{full}/pq")
+    cents = load_ivf_index(spark, _part(spark, full, "ivf"))
+    cb = load_pq_index(spark, _part(spark, full, "pq"))
     _encode_cells(emb, cents, cb, "vec_id", "embedding").write.mode(
         "overwrite"
-    ).parquet(f"{full}/codes")
+    ).parquet(_part(spark, full, "codes"))
 
     q = emb.orderBy("vec_id").limit(5).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -456,14 +465,11 @@ def test_ann_index_append_drift_report(spark, emb, tmp_path):
 
 
 def test_ann_index_append_guards(spark, emb, tmp_path):
-    """Append validation never tears the artifact: a bad delta fails
-    BEFORE the marker comes off (the index stays servable); appending
-    to a markerless or pre-append-era (no stats) artifact is rejected;
-    a crash inside the codes append itself leaves the loudly-rejected
-    torn state."""
-    import os
-    import shutil
-
+    """Append validation never touches the artifact: a bad delta fails
+    before anything is written (the index stays servable at its
+    version); appending to a root without a manifest is rejected; a
+    crash inside the codes write itself leaves the previous version
+    live."""
     import pytest as _pytest
 
     from hospital_stain_tracker_data_pipeline_spark.operators import pq
@@ -473,50 +479,40 @@ def test_ann_index_append_guards(spark, emb, tmp_path):
     idx = str(tmp_path / "ann")
     pq.build_ann_index(base, idx, n_clusters=4, m=8, n_codes=16, iters=1)
     q = emb.limit(1).select(F.col("vec_id").alias("query_id"), "embedding")
+    n0 = _codes(spark, idx).count()
 
-    # wrong id column: rejected up front, marker intact, still servable
+    # wrong id column: rejected up front, version unchanged, servable
     with _pytest.raises(ValueError, match="lacks column"):
         pq.append_ann_index(
             spark, idx, delta.withColumnRenamed("vec_id", "doc_id")
         )
-    assert os.path.exists(os.path.join(idx, "_INDEX_OK"))
+    assert load_manifest(spark, idx).version == 1
     assert pq.search_ann_index(spark, idx, q, k=3, nprobe=2).count() == 3
 
-    # no marker at all
-    with _pytest.raises(ValueError, match="_INDEX_OK"):
+    # no manifest at all
+    with _pytest.raises(ValueError, match="not a committed artifact"):
         pq.append_ann_index(spark, str(tmp_path / "nope"), delta)
 
-    # pre-append-era artifact (no fit-time stats)
-    old = str(tmp_path / "old")
-    pq.build_ann_index(base, old, n_clusters=4, m=8, n_codes=16, iters=1)
-    shutil.rmtree(os.path.join(old, "stats"))
-    with _pytest.raises(ValueError, match="stats"):
-        pq.append_ann_index(spark, old, delta)
-
-    # crash INSIDE the codes append (after validation) => torn, rejected.
-    # Since round 14 the delta is validated/encoded in ONE materialized
-    # pass (so a bad batch still fails before the marker comes off) and
-    # the only post-marker-removal step is the codes parquet write —
-    # inject the crash there.
-    torn = str(tmp_path / "torn")
-    pq.build_ann_index(base, torn, n_clusters=4, m=8, n_codes=16, iters=1)
+    # crash INSIDE the codes write (after validation): the delta is
+    # validated/encoded in ONE materialized pass, so the only write is
+    # the new codes part — the previous version stays live and servable
     from pyspark.sql.readwriter import DataFrameWriter
 
     real = DataFrameWriter.parquet
     try:
         def _boom(self, p, *a, **k):
-            if p.rstrip("/").endswith("/codes"):
+            if "/codes-" in p:
                 raise RuntimeError("simulated executor loss")
             return real(self, p, *a, **k)
 
         DataFrameWriter.parquet = _boom
         with _pytest.raises(RuntimeError, match="simulated"):
-            pq.append_ann_index(spark, torn, delta)
+            pq.append_ann_index(spark, idx, delta)
     finally:
         DataFrameWriter.parquet = real
-    assert not os.path.exists(os.path.join(torn, "_INDEX_OK"))
-    with _pytest.raises(ValueError, match="_INDEX_OK"):
-        pq.search_ann_index(spark, torn, q)
+    assert load_manifest(spark, idx).version == 1
+    assert _codes(spark, idx).count() == n0
+    assert pq.search_ann_index(spark, idx, q, k=3, nprobe=2).count() == 3
 
 
 def test_ann_index_drift_probe_is_read_only(spark, emb, tmp_path):
@@ -524,8 +520,6 @@ def test_ann_index_drift_probe_is_read_only(spark, emb, tmp_path):
     (same stats, same thresholds) while mutating NOTHING — the
     monitoring half of the refit loop: probe first, append (or refit)
     on the verdict."""
-    import os
-
     from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
         ann_index_drift,
         append_ann_index,
@@ -536,12 +530,12 @@ def test_ann_index_drift_probe_is_read_only(spark, emb, tmp_path):
     delta = emb.filter(F.col("vec_id") % 10 == 0)
     idx = str(tmp_path / "ann")
     build_ann_index(base, idx, n_clusters=4, m=8, n_codes=16, iters=1)
-    n0 = spark.read.parquet(f"{idx}/codes").count()
+    n0 = _codes(spark, idx).count()
 
     probe = ann_index_drift(spark, idx, delta.select("embedding"))
     assert probe["appends"] == 0
-    assert spark.read.parquet(f"{idx}/codes").count() == n0  # untouched
-    assert os.path.exists(os.path.join(idx, "_INDEX_OK"))
+    assert _codes(spark, idx).count() == n0  # untouched
+    assert load_manifest(spark, idx).version == 1  # nothing committed
 
     applied = append_ann_index(spark, idx, delta)
     for k in (
@@ -557,10 +551,10 @@ def test_ann_index_drift_probe_is_read_only(spark, emb, tmp_path):
         assert probe[k] == applied[k], k
     assert applied["appends"] == 1
 
-    # probing a markerless dir is rejected like every other artifact op
+    # probing a dir without a manifest is rejected like every other op
     import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="_INDEX_OK"):
+    with _pytest.raises(ValueError, match="not a committed artifact"):
         ann_index_drift(spark, str(tmp_path / "nope"), delta)
 
 
@@ -569,14 +563,11 @@ def test_ann_index_remove_matches_rebuild_without_ids(spark, emb, tmp_path):
     index whose codes were re-encoded WITHOUT the removed ids (same
     frozen fits) serves — a takedown changes the candidate set, never
     the ranking math. Unknown ids tombstone harmlessly."""
-    import os
-
     from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
         _encode_cells,
         build_ann_index,
         load_ivf_index,
         load_pq_index,
-        remove_from_ann_index,
         search_ann_index,
     )
 
@@ -586,12 +577,12 @@ def test_ann_index_remove_matches_rebuild_without_ids(spark, emb, tmp_path):
     removed = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
     n_removed = removed.count()
 
-    rep = remove_from_ann_index(spark, idx, removed)
+    rep = remove_from_index(spark, idx, removed)
     assert rep["requested"] == n_removed
     assert rep["tombstones_total"] == n_removed
     assert rep["removes"] == 1
     assert rep["compact_recommended"] == (rep["tombstone_ratio"] >= 0.1)
-    assert os.path.exists(os.path.join(idx, "_INDEX_OK"))
+    assert rep["index_rows"] == emb.count()
 
     q = emb.orderBy("vec_id").limit(6).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -606,12 +597,12 @@ def test_ann_index_remove_matches_rebuild_without_ids(spark, emb, tmp_path):
     # reference: identical deterministic fits, codes re-encoded minus ids
     ref = str(tmp_path / "ref")
     build_ann_index(emb, ref, **params)
-    cents = load_ivf_index(spark, f"{ref}/ivf")
-    cb = load_pq_index(spark, f"{ref}/pq")
+    cents = load_ivf_index(spark, _part(spark, ref, "ivf"))
+    cb = load_pq_index(spark, _part(spark, ref, "pq"))
     _encode_cells(
         emb.join(removed, "vec_id", "left_anti"), cents, cb,
         "vec_id", "embedding",
-    ).write.mode("overwrite").parquet(f"{ref}/codes")
+    ).write.mode("overwrite").parquet(_part(spark, ref, "codes"))
     want = sorted(map(tuple, search_ann_index(
         spark, ref, q, k=5, nprobe=2
     ).collect()))
@@ -619,7 +610,7 @@ def test_ann_index_remove_matches_rebuild_without_ids(spark, emb, tmp_path):
 
     # unknown ids: harmless tombstones (results unchanged), ratio grows
     ghost = spark.range(3).select((F.col("id") + 10_000_000).alias("vec_id"))
-    rep2 = remove_from_ann_index(spark, idx, ghost)
+    rep2 = remove_from_index(spark, idx, ghost)
     assert rep2["removes"] == 2
     assert rep2["tombstones_total"] == n_removed + 3
     still = sorted(map(tuple, search_ann_index(
@@ -631,27 +622,24 @@ def test_ann_index_remove_matches_rebuild_without_ids(spark, emb, tmp_path):
 def test_ann_index_compact_folds_tombstones(spark, emb, tmp_path):
     """Compaction is storage-only: identical search results before and
     after, codes rows shrink by the live tombstone count, the
-    tombstone dir clears, the ratio gate defers a premature rewrite,
-    and remove/compact refuse a torn artifact."""
-    import json
-    import os
+    tombstones part clears, the ratio gate defers a premature rewrite,
+    and remove/compact refuse a root without a manifest."""
+    import shutil
 
     import pytest as _pytest
 
     from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
         build_ann_index,
-        compact_ann_index,
-        remove_from_ann_index,
         search_ann_index,
     )
 
     params = dict(n_clusters=4, m=8, n_codes=16, iters=2)
     idx = str(tmp_path / "ann")
     build_ann_index(emb, idx, **params)
-    n_all = spark.read.parquet(f"{idx}/codes").count()
+    n_all = _codes(spark, idx).count()
     removed = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
     n_removed = removed.count()
-    remove_from_ann_index(spark, idx, removed)
+    remove_from_index(spark, idx, removed)
 
     q = emb.orderBy("vec_id").limit(6).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -661,17 +649,17 @@ def test_ann_index_compact_folds_tombstones(spark, emb, tmp_path):
     ).collect()))
 
     # ratio gate: ~1/7 of ids tombstoned — a 0.5 floor must defer
-    deferred = compact_ann_index(spark, idx, min_ratio=0.5)
+    deferred = compact_index(spark, idx, min_ratio=0.5)
     assert deferred["compacted"] is False
-    assert os.path.isdir(os.path.join(idx, "tombstones"))
+    assert load_manifest(spark, idx).parts["tombstones"]
 
-    crep = compact_ann_index(spark, idx, min_ratio=0.1)
+    crep = compact_index(spark, idx, min_ratio=0.1)
     assert crep["compacted"] is True
-    assert crep["codes_rows_before"] == n_all
-    assert crep["codes_rows_after"] == n_all - n_removed
-    assert not os.path.isdir(os.path.join(idx, "tombstones"))
-    with open(os.path.join(idx, "_INDEX_OK")) as f:
-        assert json.load(f)["compactions"] == 1
+    assert crep["index_rows_before"] == n_all
+    assert crep["index_rows_after"] == n_all - n_removed
+    assert crep["compactions"] == 1
+    man = load_manifest(spark, idx)
+    assert man.parts["tombstones"] == [] and man.meta["compactions"] == 1
 
     after = sorted(map(tuple, search_ann_index(
         spark, idx, q, k=5, nprobe=2
@@ -679,21 +667,21 @@ def test_ann_index_compact_folds_tombstones(spark, emb, tmp_path):
     assert after == before
 
     # nothing left to fold: explicit no-op, not an error
-    noop = compact_ann_index(spark, idx, force=True)
+    noop = compact_index(spark, idx, force=True)
     assert noop["compacted"] is False and noop["reason"] == "no tombstones"
 
-    # torn artifact: both lifecycle ops refuse; a bad ids frame fails
-    # BEFORE the marker comes off (artifact stays intact)
+    # a bad ids frame fails before anything is written; a root without
+    # a manifest: both lifecycle ops refuse
     with _pytest.raises(ValueError, match="lacks column"):
-        remove_from_ann_index(
+        remove_from_index(
             spark, idx, spark.range(1).select(F.col("id").alias("wrong"))
         )
-    assert os.path.exists(os.path.join(idx, "_INDEX_OK"))
-    os.remove(os.path.join(idx, "_INDEX_OK"))
-    with _pytest.raises(ValueError, match="_INDEX_OK"):
-        remove_from_ann_index(spark, idx, removed)
-    with _pytest.raises(ValueError, match="_INDEX_OK"):
-        compact_ann_index(spark, idx)
+    assert load_manifest(spark, idx).version == man.version
+    shutil.rmtree(f"{idx}/_manifest")
+    with _pytest.raises(ValueError, match="not a committed artifact"):
+        remove_from_index(spark, idx, removed)
+    with _pytest.raises(ValueError, match="not a committed artifact"):
+        compact_index(spark, idx)
 
 
 def test_ann_index_tombstone_suppresses_reappend_until_compacted(
@@ -706,8 +694,6 @@ def test_ann_index_tombstone_suppresses_reappend_until_compacted(
     from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
         append_ann_index,
         build_ann_index,
-        compact_ann_index,
-        remove_from_ann_index,
         search_ann_index,
     )
 
@@ -727,14 +713,85 @@ def test_ann_index_tombstone_suppresses_reappend_until_compacted(
         )
 
     assert serves_target()
-    remove_from_ann_index(spark, idx, target.select("vec_id"))
+    remove_from_index(spark, idx, target.select("vec_id"))
     assert not serves_target()
     # re-append the same id: the tombstone still suppresses it
     append_ann_index(spark, idx, target)
     assert not serves_target()
     # compaction folds the re-append away too (documented), clearing
     # the tombstone — an append AFTER compaction serves again
-    compact_ann_index(spark, idx, force=True)
+    compact_index(spark, idx, force=True)
     assert not serves_target()
     append_ann_index(spark, idx, target)
     assert serves_target()
+
+
+def test_adc_table_bound_fails_loud(spark, emb, codebooks, monkeypatch):
+    """The driver-side ADC table (q x m x n_codes int64) is bounded:
+    more queries than ADC_TABLE_MAX_BYTES allows raise a ValueError
+    naming the bound, and at a bound the queries fit, results equal
+    the default's."""
+    from hospital_stain_tracker_data_pipeline_spark.operators import pq
+
+    codes = pq_encode(emb, codebooks)
+    q = emb.orderBy("vec_id").limit(4).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    want = sorted(map(tuple, knn_pq(codes, q, codebooks, k=3).collect()))
+    per_query = codebooks.shape[0] * codebooks.shape[1] * 8
+    monkeypatch.setattr(pq, "ADC_TABLE_MAX_BYTES", 4 * per_query)
+    got = sorted(map(tuple, knn_pq(codes, q, codebooks, k=3).collect()))
+    assert got == want and len(got) == 12
+    monkeypatch.setattr(pq, "ADC_TABLE_MAX_BYTES", 3 * per_query)
+    with pytest.raises(ValueError, match="ADC_TABLE_MAX_BYTES"):
+        knn_pq(codes, q, codebooks, k=3)
+
+
+@pytest.mark.parametrize("scheme", ["plain", "uri"])
+def test_ann_index_crash_matrix(
+    spark, emb, tmp_path, crash_in, assert_no_orphans, scheme
+):
+    """ANN build (over an existing index), append and compact, each
+    crashed before the manifest create (the previous version serves)
+    and after it (the new version serves); the next commit leaves no
+    orphan dirs."""
+    from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
+        append_ann_index,
+        build_ann_index,
+    )
+
+    params = dict(n_clusters=2, m=2, n_codes=4, iters=1)
+    base = emb.filter(F.col("vec_id") % 10 != 0)
+    delta = emb.filter(F.col("vec_id") % 10 == 0)
+    dead = emb.filter(F.col("vec_id") % 7 == 0).select("vec_id")
+    n_base, n_all = base.count(), emb.count()
+    n_dead = base.join(dead, "vec_id", "left_semi").count()
+    ops = {
+        "build": lambda p: build_ann_index(emb, p, **params),
+        "append": lambda p: append_ann_index(spark, p, delta),
+        "compact": lambda p: compact_index(spark, p, force=True),
+    }
+    # (codes rows, tombstones listed) before and after the commit point
+    expect = {
+        "build": ((n_base, False), (n_all, False)),
+        "append": ((n_base, False), (n_all, False)),
+        "compact": ((n_base, True), (n_base - n_dead, False)),
+    }
+    ghost = spark.range(1).select((F.col("id") - 1).alias("vec_id"))
+    for op, run in ops.items():
+        for when in ("before", "after"):
+            path = str(tmp_path / f"{op}_{when}")
+            if scheme == "uri":
+                path = "file://" + path
+            build_ann_index(base, path, **params)
+            if op == "compact":
+                remove_from_index(spark, path, dead)
+            with crash_in(when):
+                run(path)
+            rows, tombs = expect[op][when == "after"]
+            man = load_manifest(spark, path)
+            assert _codes(spark, path).count() == rows, (op, when)
+            assert bool(man.parts["tombstones"]) == tombs, (op, when)
+            # the next commit sweeps whatever the crash left behind
+            remove_from_index(spark, path, ghost)
+            assert_no_orphans(path)

@@ -542,32 +542,6 @@ def test_cdc_chunks_conservation_and_contiguity(spark, docs, window, divisor):
         assert sum(n for _, n in chunks.values()) == len(toks)
 
 
-@_slow
-@given(
-    edges=st.lists(
-        st.tuples(st.integers(0, 8), st.integers(0, 8)),
-        min_size=1,
-        max_size=25,
-    ),
-)
-def test_pagerank_is_a_proper_distribution(spark, edges):
-    """Any edge list (self-loops and duplicates included): ranks are
-    positive and sum to 1 over the node set."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.graph import (
-        pagerank,
-    )
-
-    edges = [(a, b) for a, b in edges if a != b]
-    if not edges:
-        return
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["node"]: r["rank"] for r in pagerank(df, iters=10).collect()}
-    nodes = {x for e in edges for x in e}
-    assert set(got) == nodes
-    assert all(v > 0 for v in got.values())
-    assert abs(sum(got.values()) - 1.0) < 1e-9
-
-
 @settings(max_examples=40, deadline=None)
 @given(
     st.lists(st.integers(-8000, 8000), min_size=1, max_size=400),

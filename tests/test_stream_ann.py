@@ -16,6 +16,7 @@ import os
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+from hospital_stain_tracker_data_pipeline_spark.artifacts import load_manifest
 from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
     append_ann_index,
     build_ann_index,
@@ -41,6 +42,10 @@ def _land(df, path):
         }),
         path,
     )
+
+
+def _codes(spark, idx):
+    return load_manifest(spark, idx).read(spark, "codes")
 
 
 def _search_rows(spark, idx, queries):
@@ -70,7 +75,7 @@ def test_stream_ann_ingest_matches_batch_appends(spark, sf_dir, tmp_path):
     rows1 = ledger1.collect()
     assert sum(r["appended"] for r in rows1) == n_d1
     assert (
-        spark.read.parquet(f"{idx}/codes").count() == n_base + n_d1
+        _codes(spark, idx).count() == n_base + n_d1
     )
 
     # wave 2: one genuinely new delta + one REPLAY of delta-1's ids —
@@ -81,7 +86,7 @@ def test_stream_ann_ingest_matches_batch_appends(spark, sf_dir, tmp_path):
     ledger2 = stream_ann_ingest(spark, str(landing), idx, sink)
     assert sum(r["appended"] for r in ledger2.collect()) == n_d1 + n_d2
     assert (
-        spark.read.parquet(f"{idx}/codes").count() == n_base + n_d1 + n_d2
+        _codes(spark, idx).count() == n_base + n_d1 + n_d2
     )
 
     # artifact equivalence: the streamed index answers searches
@@ -101,7 +106,7 @@ def test_stream_ann_ingest_matches_batch_appends(spark, sf_dir, tmp_path):
     # codes unchanged
     ledger3 = stream_ann_ingest(spark, str(landing), idx, sink)
     assert (
-        spark.read.parquet(f"{idx}/codes").count() == n_base + n_d1 + n_d2
+        _codes(spark, idx).count() == n_base + n_d1 + n_d2
     )
     assert sum(r["appended"] for r in ledger3.collect()) == n_d1 + n_d2
 
@@ -111,7 +116,7 @@ def test_stream_ann_ingest_requires_built_index(spark, tmp_path):
 
     landing = tmp_path / "landing"
     landing.mkdir()
-    with pytest.raises(ValueError, match="_INDEX_OK"):
+    with pytest.raises(ValueError, match="not a committed artifact"):
         stream_ann_ingest(
             spark, str(landing), str(tmp_path / "noidx"),
             str(tmp_path / "ledger"),

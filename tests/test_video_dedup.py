@@ -30,6 +30,9 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+    save_fp_index,
+)
 from hospital_stain_tracker_data_pipeline_spark.operators.jpeg import (
     decode_jpeg_pixels,
     encode_jpeg,
@@ -325,8 +328,9 @@ def test_dedup_videos_against_corpus(spark, tmp_path):
 def test_vhash_index_roundtrip_and_guards(spark, tmp_path):
     """The tagged-artifact discipline (generic dedup.save_fp_index
     under the hood): parameters ride the tag and come back from load;
-    NULL rows drop at save; an EMPTY index round-trips; tagless,
-    mixed-tag, and foreign-family artifacts fail loudly."""
+    NULL rows drop at save; an EMPTY index round-trips; a root without
+    a manifest, foreign-family and wrong-column artifacts fail
+    loudly."""
     media = _media(spark, [_avi(_frames_px(s)) for s in range(3)] + [None])
     fps = video_phash(media, n_samples=4, fake_decode=True)
     path = str(tmp_path / "vhidx")
@@ -352,33 +356,24 @@ def test_vhash_index_roundtrip_and_guards(spark, tmp_path):
         save_vhash_index(fps.drop("vhash"), str(tmp_path / "x1"))
     plain = str(tmp_path / "plain")
     fps.select("media_id", "vhash").write.parquet(plain)
-    with pytest.raises(ValueError, match="_fp_tag"):
+    with pytest.raises(ValueError, match="not a committed artifact"):
         load_vhash_index(spark, plain)
     # foreign family tag: NOT probe-able as vhash even when the
     # columns happen to line up
     foreign = str(tmp_path / "foreign")
-    fps.select("media_id", "vhash").withColumn(
-        "_fp_tag", F.lit("afp-other-family")
-    ).write.parquet(foreign)
+    save_fp_index(
+        fps, foreign, "afp-other-family", id_col="media_id", hash_col="vhash"
+    )
     with pytest.raises(ValueError, match="not a vphash-v1"):
         load_vhash_index(spark, foreign)
     # an artifact written under different column names is rejected
-    # before any tag parse (the generic loader's column guard)
     wrongcols = str(tmp_path / "wrongcols")
-    fps.select("media_id", F.col("vhash").alias("afp")).withColumn(
-        "_fp_tag", F.lit("vphash-v1:dhash:8:n_samples=4")
-    ).write.parquet(wrongcols)
+    save_fp_index(
+        fps.select("media_id", F.col("vhash").alias("afp")), wrongcols,
+        "vphash-v1:dhash:8:n_samples=4", id_col="media_id", hash_col="afp",
+    )
     with pytest.raises(ValueError, match="lacks column"):
         load_vhash_index(spark, wrongcols)
-    mixed = str(tmp_path / "mixed")
-    fps.select("media_id", "vhash").withColumn(
-        "_fp_tag", F.lit("vphash-v1:dhash:8:n_samples=4")
-    ).write.parquet(mixed)
-    fps.select("media_id", "vhash").withColumn(
-        "_fp_tag", F.lit("vphash-v1:dhash:8:n_samples=8")
-    ).write.mode("append").parquet(mixed)
-    with pytest.raises(ValueError, match="mixes"):
-        load_vhash_index(spark, mixed)
 
 
 def test_vhash_index_append_feeds_corpus_gate(spark, tmp_path):
