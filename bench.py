@@ -563,9 +563,11 @@ def _extras_registry():
         import numpy as np2
         import pandas as pd2
 
+        from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (  # noqa: E501
+            media_dup_pairs,
+        )
         from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
             encode_bmp,
-            image_dup_pairs,
             to_media_table,
         )
 
@@ -591,7 +593,7 @@ def _extras_registry():
 
         rendered = docs.mapInPandas(render, "doc_id long, payload binary")
         media = to_media_table(rendered, "doc_id", "payload", source="bench")
-        return image_dup_pairs(media, max_hamming=3)
+        return media_dup_pairs(media, "image", max_hamming=3)
 
     def audio_near_dup(spark, sf_dir):
         """Audio near-dup dedup at bench scale: synthesize a
@@ -606,8 +608,8 @@ def _extras_registry():
         import numpy as np2
         import pandas as pd2
 
-        from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (  # noqa: E501
-            audio_dup_pairs,
+        from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (  # noqa: E501
+            media_dup_pairs,
         )
         from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
             encode_wav,
@@ -637,7 +639,7 @@ def _extras_registry():
 
         rendered = docs.mapInPandas(render, "doc_id long, payload binary")
         media = to_media_table(rendered, "doc_id", "payload", source="bench")
-        return audio_dup_pairs(media, max_hamming=4)
+        return media_dup_pairs(media, "audio", max_hamming=4)
 
     def pdf_extract(spark, sf_dir):
         """PDF ingestion at bench scale: wrap every document's text as
@@ -738,8 +740,8 @@ def _extras_registry():
             build_mjpeg_avi,
             to_media_table,
         )
-        from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (  # noqa: E501
-            video_dup_pairs,
+        from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (  # noqa: E501
+            media_dup_pairs,
         )
 
         # synthesis is ~20 ms of pure-python JPEG codec per clip; the
@@ -783,7 +785,7 @@ def _extras_registry():
         rendered = docs.mapInPandas(render, "doc_id long, payload binary")
         media = to_media_table(rendered, "doc_id", "payload", source="bench")
         # n_samples=3 over 3 frames: each frame decodes exactly once
-        return video_dup_pairs(media, n_samples=3, max_hamming=4)
+        return media_dup_pairs(media, "video", max_hamming=4, n_samples=3)
 
     def ann_append(spark, sf_dir):
         """The full incremental-ANN lifecycle, phase-timed: build the

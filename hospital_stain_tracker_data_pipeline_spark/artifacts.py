@@ -22,8 +22,8 @@ time: the exclusive create makes a racing writer that picked the same
 version fail, but a writer that loaded an older manifest would drop
 parts committed in between.
 
-Users: the ANN index (``operators.pq``), the four fingerprint index
-kinds (``operators.dedup``/``multimodal``/``audio_fp``/``video_fp``)
+Users: the ANN index (``operators.pq``), the two fingerprint index
+kinds (``operators.dedup``: MinHash and the tagged Hamming families)
 and curate's per-stage store (``pipeline.curate``). The index kinds
 share one tombstone lifecycle here: ``remove_from_index`` and
 ``compact_index``, keyed by the id column each manifest records.
@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 _MANIFEST_DIR = "_manifest"
 _MANIFEST_NAME = re.compile(r"(\d+)\.json")
 # index kinds with a row part plus tombstones (the lifecycle kinds)
-_INDEX_KINDS = ("ann_ivf_pq", "minhash", "phash", "fp_tagged")
+_INDEX_KINDS = ("ann_ivf_pq", "minhash", "fp_tagged")
 _COUNTERS = ("appends", "removes", "compactions")
 
 

@@ -126,8 +126,11 @@ from .retrieval import (  # noqa: F401
     reciprocal_rank_fusion,
 )
 from .dedup import (  # noqa: F401
+    MEDIA_FP,
+    MediaFamily,
     append_fp_index,
     dedup_against_corpus,
+    dedup_media_against_corpus,
     dedup_pairs_against_corpus,
     dedup_substrings,
     hamming_hot_bucket_report,
@@ -137,7 +140,9 @@ from .dedup import (  # noqa: F401
     simhash_hot_bucket_report,
     load_dedup_index,
     load_fp_index,
+    load_media_index,
     lsh_hot_buckets,
+    media_dup_pairs,
     minhash_hot_bucket_report,
     save_fp_index,
     minhash_signature_index,
@@ -155,22 +160,8 @@ from .similarity import (  # noqa: F401
     semantic_dedup,
     semantic_dedup_pairs,
 )
-from .audio_fp import (  # noqa: F401
-    append_afp_index,
-    audio_dup_pairs,
-    audio_fingerprint,
-    dedup_audio_against_corpus,
-    load_afp_index,
-    save_afp_index,
-)
-from .video_fp import (  # noqa: F401
-    append_vhash_index,
-    dedup_videos_against_corpus,
-    load_vhash_index,
-    save_vhash_index,
-    video_dup_pairs,
-    video_phash,
-)
+from .audio_fp import audio_fingerprint  # noqa: F401
+from .video_fp import video_phash  # noqa: F401
 from .pdf import (  # noqa: F401
     build_objstm_pdf,
     build_simple_pdf,
@@ -179,17 +170,12 @@ from .pdf import (  # noqa: F401
     sniff_pdf,
 )
 from .multimodal import (  # noqa: F401
-    append_phash_index,
-    classify_media,
-    dedup_images_against_corpus,
-    load_phash_index,
-    save_phash_index,
     extract_audio_features,
     extract_image_features,
     extract_video_features,
-    image_dup_pairs,
     image_phash,
     sample_video_frames,
+    tag_media_modality,
 )
 from .features import (  # noqa: F401
     hashed_text_features,

@@ -15,6 +15,11 @@ Scale design:
 
 from __future__ import annotations
 
+import re
+import string
+from collections.abc import Callable
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -30,6 +35,9 @@ from ..artifacts import (
     write_new,
 )
 from ..functions.text import fingerprint64_hex, normalized_text, word_shingles
+from .audio_fp import audio_fingerprint
+from .multimodal import image_phash
+from .video_fp import video_phash
 
 
 def _segment_starts(arrs) -> tuple:
@@ -1150,9 +1158,10 @@ def hamming_hot_bucket_report(
     """(band, val, members) rows the Hamming pair engine drops under
     ``max_bucket`` — same banding projection as
     ``hamming_pairs``/``_banded_candidate_pairs``, so the report
-    matches what the operator actually skipped. Pipelines surface its
-    count (``curate_media``'s ``media_report``, the CLI media gates)
-    so the recall trade is visible, never silent."""
+    matches what the operator actually skipped — an audit hook: the
+    pipelines (``curate_media``'s report, the CLI media gates) take
+    their drop counts from the cap's own ``telemetry=`` out-param
+    instead, which rides the cap's existing action."""
     banded = _band_explode(
         hashes.select(
             F.col(id_col), F.col(hash_col).cast("long").alias("_fp")
@@ -1264,7 +1273,7 @@ def hamming_pairs(
     Returns ``(id_a, id_b, hamming)`` with ``id_a < id_b``; NULL
     fingerprints never pair. The (id, hash) projection is materialized
     before the banding self-join — both join sides would otherwise
-    re-execute the fingerprint producer (for ``image_dup_pairs`` that
+    re-execute the fingerprint producer (for ``media_dup_pairs`` that
     is the full pixel decode of every payload).
 
     (band, val) buckets above ``max_bucket`` are dropped before the
@@ -1983,9 +1992,9 @@ def save_fp_index(
     hash_col: str = "fp",
 ) -> None:
     """Persist ANY 64-bit-fingerprint index WITH a family/revision tag
-    — the generic form of the phash artifact discipline (the audio and
-    video tiers delegate here): the manifest meta records the tag and
-    the column names, and ``load_fp_index`` validates the tag, so
+    (a media family writes ``MEDIA_FP[kind].tag(params)`` with its
+    ``hash_col``): the manifest meta records the tag and the column
+    names, and ``load_fp_index`` validates the tag, so
     fingerprints from a different family, parameter set, or algorithm
     revision can never be probed silently (they would match nothing
     meaningful). Only ``(id_col, hash_col)`` persist — 8 B + an id per
@@ -2075,9 +2084,243 @@ def load_fp_index(
     / parameter set / revision). Pass ``expected_tag=None`` when the
     caller derives its parameters FROM the artifact (it must then
     validate the returned tag's family itself, the way
-    ``video_fp.load_vhash_index`` does)."""
+    ``load_media_index`` does)."""
     m = _fp_manifest(spark, path, expected_tag)
     return live_rows(spark, m), m.meta["tag"]
+
+
+# the value each tag field may take: a tag that parses is in range
+_TAG_FIELDS = {
+    "algo": "dhash|ahash",
+    "hash_size": "[1-8]",  # hash_size² bits in one LONG
+    "n_samples": "[1-9][0-9]*",
+}
+
+
+@dataclass(frozen=True)
+class MediaFamily:
+    """One 64-bit Hamming fingerprint family of the media tier. The
+    fingerprint function is the only kind-specific code; pairs, the
+    persisted index, the corpus gate, the stream and the CLI all read
+    this entry. ``defaults`` are the fingerprint's parameters, every
+    one of which changes the bits and so rides the index tag
+    ``tag_format``; ``max_hamming`` is the family's default near-dup
+    radius."""
+
+    kind: str
+    hash_col: str
+    max_hamming: int
+    defaults: dict
+    tag_format: str
+    fn: Callable  # (media, fake_decode=, **params) -> fingerprints
+
+    def params(self, **given) -> dict:
+        unknown = sorted(set(given) - set(self.defaults))
+        if unknown:
+            raise TypeError(
+                f"{self.kind} fingerprints take no parameter(s) {unknown}"
+                f" (they take {sorted(self.defaults)})"
+            )
+        return {**self.defaults, **given}
+
+    def nbits(self, params: dict) -> int:
+        return params["hash_size"] ** 2 if "hash_size" in params else 64
+
+    def parse(self, tag: str) -> dict | None:
+        """The parameters ``tag`` records, or None when it is not a
+        tag of this family (or a value is out of range)."""
+        pattern = "".join(
+            re.escape(lit) + (f"(?P<{f}>{_TAG_FIELDS[f]})" if f else "")
+            for lit, f, _, _ in string.Formatter().parse(self.tag_format)
+        )
+        m = re.fullmatch(pattern, tag)
+        if m is None:
+            return None
+        return {
+            k: v if k == "algo" else int(v) for k, v in m.groupdict().items()
+        }
+
+    def tag(self, params: dict) -> str:
+        tag = self.tag_format.format(**params)
+        if self.parse(tag) != params:
+            raise ValueError(
+                f"{self.kind} fingerprint parameters {params} are out of "
+                "range (algo dhash|ahash, 1 <= hash_size <= 8, "
+                "n_samples >= 1)"
+            )
+        return tag
+
+    def fingerprint(
+        self, media: DataFrame, params: dict, fake_decode: bool = False
+    ) -> DataFrame:
+        """``(media_id, mime, <hash_col>, decoded, …)`` over the media
+        table."""
+        return self.fn(media, fake_decode=fake_decode, **params)
+
+
+MEDIA_FP = {
+    f.kind: f
+    for f in (
+        MediaFamily(
+            "image", "phash", 3,
+            {"algo": "dhash", "hash_size": 8},
+            "phash-v1:{algo}:{hash_size}",
+            image_phash,
+        ),
+        # 16 segments x 4 lag pairs = 64 bits (``audio_fp``); the tag
+        # names the rate, segments and lags of the v1 fingerprint
+        MediaFamily(
+            "audio", "afp", 4,
+            {},
+            "hk-lag-v1:8000:16:1,2,4,8,16",
+            audio_fingerprint,
+        ),
+        MediaFamily(
+            "video", "vhash", 4,
+            {"algo": "dhash", "hash_size": 8, "n_samples": 8},
+            "vphash-v1:{algo}:{hash_size}:n_samples={n_samples}",
+            video_phash,
+        ),
+    )
+}
+
+
+def media_dup_pairs(
+    media: DataFrame,
+    kind: str,
+    max_hamming: int | None = None,
+    fake_decode: bool = False,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    telemetry: dict | None = None,
+    **params,
+) -> DataFrame:
+    """Near-duplicate pairs of one media family: its fingerprint
+    (``params`` as in ``MEDIA_FP[kind].defaults``) + the pigeonhole
+    Hamming banding (``hamming_pairs``) — ``(id_a, id_b, hamming)``
+    for every pair whose fingerprints differ in <= ``max_hamming``
+    bits (the family's default radius when None). Exact recall at the
+    fingerprint level; payloads never enter a shuffle — candidates and
+    verify run on (id, 8 bytes). NULL fingerprints never pair."""
+    fam = MEDIA_FP[kind]
+    p = fam.params(**params)
+    return hamming_pairs(
+        fam.fingerprint(media, p, fake_decode),
+        hash_col=fam.hash_col,
+        id_col="media_id",
+        nbits=fam.nbits(p),
+        max_hamming=fam.max_hamming if max_hamming is None else max_hamming,
+        max_bucket=max_bucket,
+        telemetry=telemetry,
+    )
+
+
+def load_media_index(
+    spark: SparkSession, path: str, kind: str | None = None
+) -> tuple[DataFrame, MediaFamily, dict]:
+    """A media fingerprint index written by ``save_fp_index`` under a
+    ``MEDIA_FP`` tag: ``(index, family, params)`` with the family and
+    its parameters parsed from the tag, so a probe always fingerprints
+    with the index's own settings. Fails loudly on a root that is not
+    a committed fingerprint artifact, a tag no family parses, a family
+    other than ``kind`` (when given), or columns other than the
+    family's."""
+    m = _fp_manifest(spark, path, None)
+    tag = m.meta["tag"]
+    for fam in MEDIA_FP.values():
+        params = fam.parse(tag)
+        if params is not None:
+            break
+    else:
+        raise ValueError(
+            f"{path} records fingerprint tag {tag!r} — no media "
+            "fingerprint family or revision this engine computes "
+            "(rebuild the index)"
+        )
+    if kind is not None and fam.kind != kind:
+        raise ValueError(
+            f"{path} holds {fam.kind} fingerprints (tag {tag!r}); this "
+            f"probe computes {kind} fingerprints — rebuild the index "
+            "(cross-family probes would miss every near-dup)"
+        )
+    cols = (m.meta["id_col"], m.meta["hash_col"])
+    if cols != ("media_id", fam.hash_col):
+        raise ValueError(
+            f"{path} lacks column(s) (media_id, {fam.hash_col}) — it "
+            f"holds {cols}"
+        )
+    return live_rows(spark, m), fam, params
+
+
+def _media_gate(
+    media: DataFrame,
+    index: DataFrame,
+    fam: MediaFamily,
+    params: dict,
+    max_hamming: int | None,
+    fake_decode: bool,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    telemetry: dict | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """``(fps, matched)``: the batch's fingerprints, materialized (they
+    feed the gate join, the survivor anti-join and any append — the
+    decode runs once), and the distinct ids within ``max_hamming`` of
+    the index."""
+    fps = materialize(fam.fingerprint(media, params, fake_decode))
+    matched = (
+        hamming_pairs_against_corpus(
+            fps,
+            index,
+            hash_col=fam.hash_col,
+            id_col="media_id",
+            nbits=fam.nbits(params),
+            max_hamming=(
+                fam.max_hamming if max_hamming is None else max_hamming
+            ),
+            max_bucket=max_bucket,
+            telemetry=telemetry,
+        )
+        .select(F.col("new_id").alias("media_id"))
+        .distinct()
+    )
+    return fps, matched
+
+
+def dedup_media_against_corpus(
+    spark: SparkSession,
+    media: DataFrame,
+    index_path: str,
+    max_hamming: int | None = None,
+    fake_decode: bool = False,
+    max_bucket: int | None = DEFAULT_MAX_BUCKET,
+    telemetry: dict | None = None,
+    kind: str | None = None,
+) -> tuple[DataFrame, DataFrame, str]:
+    """Incremental media dedup (corpus wins): drop the ``media`` rows
+    whose fingerprint is within ``max_hamming`` bits (the family's
+    default when None) of anything in the index at ``index_path``.
+    The family and its parameters come from the index's tag
+    (``load_media_index``; ``kind`` additionally pins the family), so
+    probe and index cannot mismatch. The batch is fingerprinted once
+    and band-joined against the index
+    (``hamming_pairs_against_corpus``); old payloads are never
+    re-read, and the batch is not deduped against itself (compose
+    with ``media_dup_pairs``).
+
+    Returns ``(survivors, survivor_fps, tag)``: the surviving media
+    rows unchanged, their fingerprint rows (``(media_id, mime,
+    <hash_col>, decoded, …)``, no second decode) and the index tag —
+    ``append_fp_index(spark, index_path, survivor_fps, tag)`` makes
+    the next batch dedup against today's survivors too."""
+    index, fam, params = load_media_index(spark, index_path, kind)
+    fps, matched = _media_gate(
+        media, index, fam, params, max_hamming, fake_decode, max_bucket,
+        telemetry,
+    )
+    return (
+        media.join(matched, "media_id", "left_anti"),
+        fps.join(matched, "media_id", "left_anti"),
+        fam.tag(params),
+    )
 
 
 def index_fsck(spark: SparkSession, path: str) -> dict:
@@ -2091,9 +2334,9 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
 
     - manifest-committed indexes (``artifacts``; live rows after
       tombstone suppression, physical rows, tombstone count/ratio, the
-      live manifest version): ANN dir (``ann_ivf_pq``), generic
-      fingerprint (``fp_tagged`` — the audio-afp and video-vhash
-      writers wrap it), MinHash (``minhash``), image phash (``phash``);
+      live manifest version): ANN dir (``ann_ivf_pq``), tagged
+      fingerprint (``fp_tagged`` — the image, audio and video
+      ``MEDIA_FP`` families), MinHash (``minhash``);
     - parameterized summary/model artifacts (loader-validated +
       row-counted; replaced wholesale, never row-deleted, so no
       tombstone state): ``quantile_sketch`` (``_dq_*`` — the dyadic
@@ -2121,11 +2364,6 @@ def index_fsck(spark: SparkSession, path: str) -> dict:
             if m.kind == "minhash":
                 _, nh, k = load_dedup_index(spark, p)
                 report["meta"] = {"num_hashes": nh, "k": k}
-            elif m.kind == "phash":
-                from .multimodal import load_phash_index
-
-                _, algo, hs = load_phash_index(spark, p)
-                report["meta"] = {"algo": algo, "hash_size": hs}
             elif m.kind == "fp_tagged":
                 report["meta"] = {"tag": load_fp_index(spark, p, None)[1]}
             else:

@@ -172,22 +172,40 @@ def score_text_probe(
     )
 
 
+def _probe_fs(path: str):
+    """``(spark, FileSystem, Path)`` of a probe artifact through the
+    active session, so ``file:``, ``hdfs:`` and ``s3a:`` paths work."""
+    from pyspark.sql import SparkSession
+
+    from ..artifacts import hadoop_fs
+
+    spark = SparkSession.active()
+    return (spark, *hadoop_fs(spark, path))
+
+
 def save_text_probe(path: str, weights, bias: float, dim: int) -> None:
     """Persist a trained text probe as a tiny JSON artifact (weights +
     bias + the featurization dim that MUST accompany them — scoring
     with a different dim is a silent wrong answer, so the artifact
-    carries it)."""
+    carries it). Written through the Hadoop ``FileSystem`` API of the
+    active Spark session."""
     import json
 
-    with open(path, "w") as f:
-        json.dump(
+    from ..artifacts import write_text
+
+    _, fs, jpath = _probe_fs(path)
+    write_text(
+        fs,
+        jpath,
+        json.dumps(
             {
                 "dim": int(dim),
                 "bias": float(bias),
                 "weights": [float(x) for x in weights],
-            },
-            f,
-        )
+            }
+        ),
+        overwrite=True,
+    )
 
 
 def load_text_probe(path: str):
@@ -198,8 +216,10 @@ def load_text_probe(path: str):
 
     import numpy as np
 
-    with open(path) as f:
-        d = json.load(f)
+    from ..artifacts import read_text
+
+    spark, fs, jpath = _probe_fs(path)
+    d = json.loads(read_text(spark, fs, jpath))
     w = np.asarray(d["weights"], dtype=float)
     if len(w) != int(d["dim"]):
         raise ValueError(

@@ -270,7 +270,11 @@ def probe_calibration(
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("_y").alias("positives"),
-            F.round(F.avg("_s"), 6).alias("mean_score"),
+            # exact decimal accumulation: a double sum depends on how
+            # the rows are partitioned, which can move a rounding tie
+            F.round(
+                F.avg(F.col("_s").cast("decimal(38,18)")).cast("double"), 6
+            ).alias("mean_score"),
         )
     )
     w = Window.orderBy(F.desc("bucket")).rowsBetween(

@@ -43,8 +43,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .dedup import DEFAULT_MAX_BUCKET as DEDUP_DEFAULT_MAX_BUCKET
-
 
 def sniff_image(raw: bytes) -> tuple[str, int, int] | None:
     """(mime, width, height) from the container header, stdlib-only —
@@ -1291,157 +1289,6 @@ def image_phash(
     )
 
 
-def image_dup_pairs(
-    media: DataFrame,
-    algo: str = "dhash",
-    hash_size: int = 8,
-    max_hamming: int = 3,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEDUP_DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Image near-duplicate pairs: ``image_phash`` + the pigeonhole
-    Hamming banding ``simhash_pairs`` uses (``dedup.hamming_pairs``) —
-    ``(id_a, id_b, hamming)`` for every pair of images whose
-    perceptual hashes differ in <= ``max_hamming`` of the
-    ``hash_size²`` bits. Exact recall at the hash level (banding is
-    pigeonhole, not probabilistic); the pixel payloads never enter a
-    shuffle — candidate generation and verify run on the 8-byte
-    fingerprints alone, the 100 TB image-dedup shape."""
-    from .dedup import hamming_pairs
-
-    hashes = image_phash(media, algo, hash_size, fake_decode)
-    return hamming_pairs(
-        hashes,
-        hash_col="phash",
-        id_col="media_id",
-        nbits=hash_size * hash_size,
-        max_hamming=max_hamming,
-        max_bucket=max_bucket,
-    )
-
-
-def dedup_images_against_corpus(
-    new_media: DataFrame,
-    corpus_index: DataFrame,
-    algo: str = "dhash",
-    hash_size: int = 8,
-    max_hamming: int = 3,
-    fake_decode: bool = False,
-    max_bucket: int | None = DEDUP_DEFAULT_MAX_BUCKET,
-) -> DataFrame:
-    """Incremental image dedup: drop new media whose perceptual hash is
-    within ``max_hamming`` bits of anything ALREADY INDEXED (the corpus
-    wins — ``dedup_against_corpus`` semantics for the visual tier). The
-    index is simply a persisted ``image_phash`` output ``(media_id,
-    phash)`` — 8 bytes + an id per image, pixels never stored — written
-    as plain parquet once per corpus version like the MinHash signature
-    index. A daily crawl batch decodes + hashes ONLY its own payloads,
-    band-joins the tiny hash table against the index
-    (``dedup.hamming_pairs_against_corpus``), and survivors append
-    their hashes to the index.
-
-    Does NOT dedup the new batch against itself — compose with
-    ``image_dup_pairs`` for that. The index and the probe must share
-    ``algo`` + ``hash_size`` (the cross-set gate fail-fasts on a width
-    mismatch when ``hash_size < 8``). Returns surviving ``new_media``
-    rows unchanged; the binary payload never enters a shuffle. The same
-    call works per micro-batch inside ``foreachBatch`` for a streaming
-    landing directory (the ``stream_dedup_against_corpus`` pattern)."""
-    from .dedup import hamming_pairs_against_corpus
-
-    hashes = image_phash(new_media, algo, hash_size, fake_decode)
-    matched = (
-        hamming_pairs_against_corpus(
-            hashes,
-            corpus_index,
-            hash_col="phash",
-            id_col="media_id",
-            nbits=hash_size * hash_size,
-            max_hamming=max_hamming,
-            max_bucket=max_bucket,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
-    )
-    return new_media.join(matched, "media_id", "left_anti")
-
-
-def save_phash_index(
-    index: DataFrame, algo: str, hash_size: int, path: str
-) -> None:
-    """Persist a perceptual-hash index WITH its parameters — the
-    ``save_cms_sketch`` artifact discipline for the visual dedup tier:
-    the manifest meta records ``algo`` / ``hash_size``, so
-    ``load_phash_index`` returns the right ``(index, algo,
-    hash_size)`` and probing a dHash index with aHash probes (which
-    would silently match nothing meaningful) becomes structurally
-    impossible for artifact-mediated flows. ``index`` is any frame
-    carrying ``media_id`` + ``phash`` (an ``image_phash`` output or
-    its survivors projection); only those two columns persist — 8 B +
-    an id per image, pixels never stored. NULL-hash rows (undecodable
-    payloads) and NULL-id rows are dropped: neither can anchor a
-    dedup verdict. A rebuild starts with no tombstones."""
-    if algo not in ("dhash", "ahash"):
-        raise ValueError(f"unknown phash algo {algo!r} (dhash|ahash)")
-    if not (1 <= hash_size <= 8):
-        raise ValueError(
-            f"hash_size={hash_size} out of range — the LONG fingerprint "
-            "caps at 64 bits (1 <= hash_size <= 8)"
-        )
-    missing = [c for c in ("media_id", "phash") if c not in index.columns]
-    if missing:
-        raise ValueError(
-            f"index frame lacks column(s) {missing} — pass an "
-            "image_phash output (media_id, phash)"
-        )
-    from ..artifacts import write_new
-    from .dedup import _slim_fp
-
-    write_new(
-        index.sparkSession,
-        path,
-        "phash",
-        {"algo": algo, "hash_size": hash_size, "id_col": "media_id",
-         "hash_col": "phash"},
-        {"data": _slim_fp(index, "media_id", "phash")},
-    )
-
-
-def append_phash_index(spark, path: str, hashes: DataFrame) -> int:
-    """Append survivor hashes to an EXISTING ``save_phash_index``
-    artifact under the artifact's OWN recorded parameters — the
-    incremental half of the visual index (the next batch then dedups
-    against these survivors too). Returns the number of rows appended.
-    ``hashes`` must carry ``media_id`` + ``phash`` computed with the
-    SAME algo/hash_size the artifact records (feed
-    ``load_phash_index``'s returned params into ``image_phash`` —
-    artifact-mediated flows can't mismatch); NULL id/hash rows drop
-    exactly as in ``save_phash_index``."""
-    from ..artifacts import require_manifest
-    from .dedup import _append_fp_rows
-
-    return _append_fp_rows(
-        spark, require_manifest(spark, path, "phash"), hashes
-    )
-
-
-def load_phash_index(spark, path: str):
-    """Inverse of ``save_phash_index``: returns ``(index, algo,
-    hash_size)`` ready for ``dedup_images_against_corpus`` /
-    ``hamming_pairs_against_corpus``, tombstoned ids suppressed. Fails
-    loudly on a root that is not a committed phash artifact."""
-    from ..artifacts import live_rows, require_manifest
-
-    m = require_manifest(spark, path, "phash")
-    algo, hash_size = m.meta["algo"], int(m.meta["hash_size"])
-    if algo not in ("dhash", "ahash") or not (1 <= hash_size <= 8):
-        raise ValueError(
-            f"{path} records algo={algo!r} hash_size={hash_size} — "
-            "corrupt artifact"
-        )
-    return live_rows(spark, m), algo, hash_size
-
-
 def _gif_lzw_decode(data: bytes, mcs: int, n_pixels: int) -> bytes | None:
     """GIF-variant LZW: LSB-first bit packing, dynamic code size from
     ``mcs+1`` to 12 bits, clear/EOI control codes. Decoder grows the
@@ -2069,19 +1916,9 @@ def _native_image(raw: bytes, mime: str) -> bool:
     return False
 
 
-CLASSIFY_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), True),
-        T.StructField("modality", T.StringType(), False),
-        T.StructField("mime", T.StringType(), True),
-        T.StructField("native", T.BooleanType(), False),
-    ]
-)
-
-
-def _classify_bytes(raw: bytes) -> tuple[str, str | None, bool]:
-    """(modality, mime, native) for one payload — the per-row body of
-    ``classify_media`` / ``tag_media_modality``, header walks only."""
+def _classify_bytes(raw: bytes) -> tuple[str, bool]:
+    """(modality, native) for one payload — the per-row body of
+    ``tag_media_modality``, header walks only."""
     from .flac import sniff_flac
 
     modality, mime, native = "unknown", None, False
@@ -2143,23 +1980,24 @@ def _classify_bytes(raw: bytes) -> tuple[str, str | None, bool]:
                 # trailer/xref-dict scoped — page text mentioning
                 # "/Encrypt 5 0 R" must not flag the file non-native
                 native = not pdf_is_encrypted(raw)
-    return modality, mime, native
+    return modality, native
 
 
-def classify_media(media: DataFrame) -> DataFrame:
+def tag_media_modality(media: DataFrame) -> DataFrame:
     """Modality classification from container headers ONLY — the cheap
     pre-decode routing pass a mixed media lake runs before any
-    expensive tier: ``(media_id, modality, mime, native)`` where
+    expensive tier — as EXTRA COLUMNS on the full media rows:
     ``modality`` ∈ image/audio/video/document/unknown and ``native``
-    mirrors what this library's OWN decoders accept (not merely what
-    the sniffers recognize — an Xvid AVI, an 8-bit palette BMP, or a
-    lossless JPEG sniff fine but would crash a fingerprint tier), so a
-    curation recipe routes native payloads into the tiers and passes
-    the rest through:
+    appended to the input schema. ``native`` mirrors what this
+    library's OWN decoders accept (not merely what the sniffers
+    recognize — an Xvid AVI, an 8-bit palette BMP, or a lossless JPEG
+    sniff fine but would crash a fingerprint tier), so a curation
+    recipe routes native payloads into the tiers and passes the rest
+    through:
 
-    - image: ``sniff_image`` mime; native per ``_native_image``
-      (PNG/GIF full-coverage; BMP uncompressed 24-bit in-bounds; JPEG
-      8-bit SOF0/1/2; never WebP);
+    - image: ``sniff_image``; native per ``_native_image`` (PNG/GIF
+      full-coverage; BMP uncompressed 24-bit in-bounds; JPEG 8-bit
+      SOF0/1/2; never WebP);
     - audio: WAV/FLAC/MP3/Ogg header sniffs; native for 16-bit PCM WAV
       with non-empty data (the exact ``decode_wav_samples`` gate,
       probed on header fields alone) and 16-bit mono/stereo FLAC;
@@ -2170,39 +2008,9 @@ def classify_media(media: DataFrame) -> DataFrame:
       loudly at extraction time, the flag is the cheap pre-filter);
     - NULL / unrecognized payloads are ``unknown`` (never native).
 
-    Header walks only — no pixel/sample/frame decode happens here, so
-    the pass is IO-bound and safe to run on every payload. Returns the
-    SLIM frame; ``tag_media_modality`` carries the same verdicts as
-    extra columns on the full media rows (no join needed)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for media_id, payload in zip(pdf["media_id"], pdf["payload"]):
-                raw = bytes(payload) if payload is not None else b""
-                modality, mime, native = _classify_bytes(raw)
-                rows.append(
-                    {
-                        "media_id": media_id,
-                        "modality": modality,
-                        "mime": mime,
-                        "native": native,
-                    }
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CLASSIFY_SCHEMA.fields]
-            )
-
-    return media.select("media_id", "payload").mapInPandas(
-        run, schema=CLASSIFY_SCHEMA
-    )
-
-
-def tag_media_modality(media: DataFrame) -> DataFrame:
-    """``classify_media``'s verdicts as EXTRA COLUMNS on the full media
-    rows (``modality`` + ``native`` appended to the input schema) —
-    the routing shape for recipes: downstream modality subsets become
-    pure FILTERS, so the payload column never has to join against a
+    Header walks only — no pixel/sample/frame decode. This is the
+    routing shape for recipes: downstream modality subsets become pure
+    FILTERS, so the payload column never has to join against a
     corpus-sized id set (which would drag every payload byte through a
     shuffle). One Arrow-batched pass; payloads transit the Python
     worker locally and never cross a shuffle."""
@@ -2222,7 +2030,7 @@ def tag_media_modality(media: DataFrame) -> DataFrame:
             ]
             pdf = pdf.copy()
             pdf["modality"] = [v[0] for v in verdicts]
-            pdf["native"] = [v[2] for v in verdicts]
+            pdf["native"] = [v[1] for v in verdicts]
             yield pdf
 
     return media.mapInPandas(run, schema=out_schema)

@@ -14,6 +14,14 @@
                                         text-free MinHash signature index)
     dedup_filter --input --index --output  (drop new docs near-duplicating
                                         the indexed corpus; corpus wins)
+    image_index|audio_index|video_index --input --output
+                                       (media fingerprint index: one
+                                        family each — image phash, audio
+                                        afp, video vhash)
+    image_filter|audio_filter|video_filter --input --index --output
+                                       (drop new media near-duplicating
+                                        the indexed corpus; parameters
+                                        come from the index's tag)
     corpus_diff --old --new            (snapshot reconciliation: summary
                                         JSON + optional per-doc ledger;
                                         --forbid-added/--forbid-removed
@@ -679,88 +687,85 @@ def cmd_dedup_filter(args) -> None:
     print(f"kept {n_out}/{n_in} docs -> {args.output}")
 
 
-def cmd_image_index(args) -> None:
-    """Build (or refresh) the perceptual-hash index for a media corpus
-    — the visual analog of `dedup_index`: decode + dHash/aHash every
-    payload once, persist (media_id, phash) with the algo/hash_size
-    parameters riding the artifact (`save_phash_index`), 8 B + an id
-    per image. `image_filter` probes it without re-reading old
-    pixels."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        image_phash,
-        save_phash_index,
+# what each media command calls its items and their fingerprints in
+# its output lines
+_MEDIA_NOUNS = {
+    "image": ("images", "hashes"),
+    "audio": ("clips", "fingerprints"),
+    "video": ("videos", "fingerprints"),
+}
+# the flags of the fingerprint parameters a family takes
+_FP_PARAM_ARGS = {
+    "algo": {"choices": ["dhash", "ahash"]},
+    "hash_size": {"type": int},
+    "n_samples": {"type": int,
+                  "help": "frames sampled per clip for the majority vote"},
+}
+
+
+def cmd_media_index(args) -> None:
+    """`image_index` / `audio_index` / `video_index`: build (or
+    refresh) a media corpus's fingerprint index — the media analog of
+    `dedup_index`: decode + fingerprint every payload once and persist
+    (media_id, <hash>) under the family's tag (`save_fp_index` with
+    `MEDIA_FP[kind].tag`), 8 B + an id per item. The fingerprint
+    parameters (--algo/--hash-size/--n-samples, where the family has
+    them) ride the tag, so the matching `*_filter` probes without
+    re-reading old payloads and cannot mismatch."""
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        MEDIA_FP,
+        load_media_index,
+        save_fp_index,
     )
 
-    spark = get_spark(app_name="image_index")
+    fam = MEDIA_FP[args.kind]
+    spark = get_spark(app_name=f"{args.kind}_index")
     if _fp_index_lifecycle(spark, args):
         return
+    params = fam.params(**{p: getattr(args, p) for p in fam.defaults})
+    tag = fam.tag(params)
     media = spark.read.parquet(args.input)
-    hashes = image_phash(
-        media, args.algo, args.hash_size, fake_decode=args.fake_decode
+    save_fp_index(
+        fam.fingerprint(media, params, fake_decode=args.fake_decode),
+        args.output, tag, hash_col=fam.hash_col,
     )
-    save_phash_index(hashes, args.algo, args.hash_size, args.output)
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        load_phash_index,
-    )
-
-    n = load_phash_index(spark, args.output)[0].count()
-    print(f"indexed {n} images -> {args.output}")
+    n = load_media_index(spark, args.output, args.kind)[0].count()
+    print(f"indexed {n} {_MEDIA_NOUNS[args.kind][0]} -> {args.output}")
 
 
-def cmd_image_filter(args) -> None:
-    """Drop new media whose perceptual hash near-dups anything in an
-    existing phash index (corpus wins), writing the survivors — the
-    visual incremental-ingest gate, mirroring `dedup_filter`. algo and
-    hash_size come FROM the artifact (mismatch impossible); the batch
-    is hashed exactly once. --append-survivors appends the survivors'
-    hashes to the index so the next batch dedups against them too —
-    the full survivors-append deployment flow in one command."""
-    from pyspark.sql import functions as F
-
+def cmd_media_filter(args) -> None:
+    """`image_filter` / `audio_filter` / `video_filter`: drop new media
+    whose fingerprint near-dups anything in an existing index of that
+    family (corpus wins), writing the survivors — the media
+    incremental-ingest gate, mirroring `dedup_filter`. The fingerprint
+    parameters come FROM the artifact's tag (mismatch impossible; an
+    index of another family is rejected); the batch is fingerprinted
+    exactly once. --append-survivors appends the survivors'
+    fingerprints to the index so the next batch dedups against them
+    too — the full survivors-append deployment flow in one command."""
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
-        materialize,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        image_phash,
-        load_phash_index,
+        append_fp_index,
+        dedup_media_against_corpus,
     )
 
-    spark = get_spark(app_name="image_filter")
+    spark = get_spark(app_name=f"{args.kind}_filter")
     media = spark.read.parquet(args.input)
-    index, algo, hash_size = load_phash_index(spark, args.index)
-    # materialize the slim hash frame: it feeds the gate join, the
-    # survivor anti-join, and (optionally) the index append — without
-    # this the mapInPandas decode would re-run per consumer
-    hashes = materialize(
-        image_phash(media, algo, hash_size, fake_decode=args.fake_decode)
-    )
     gate_tel: dict = {}
-    matched = (
-        hamming_pairs_against_corpus(
-            hashes, index,
-            hash_col="phash", id_col="media_id",
-            nbits=hash_size * hash_size, max_hamming=args.max_hamming,
-            max_bucket=args.max_bucket or None, telemetry=gate_tel,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
+    survivors, survivor_fps, tag = dedup_media_against_corpus(
+        spark, media, args.index,
+        max_hamming=args.max_hamming, fake_decode=args.fake_decode,
+        max_bucket=args.max_bucket or None, telemetry=gate_tel,
+        kind=args.kind,
     )
-    survivors = media.join(matched, "media_id", "left_anti")
     survivors.write.mode("overwrite").parquet(args.output)
     n_in = media.count()
     n_out = spark.read.parquet(args.output).count()
+    items, fps = _MEDIA_NOUNS[args.kind]
     if args.append_survivors:
-        from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (  # noqa: E501
-            append_phash_index,
-        )
-
-        n_app = append_phash_index(
-            spark, args.index, hashes.join(matched, "media_id", "left_anti")
-        )
-        print(f"appended {n_app} survivor hashes -> {args.index}")
+        n_app = append_fp_index(spark, args.index, survivor_fps, tag)
+        print(f"appended {n_app} survivor {fps} -> {args.index}")
     print(
-        f"kept {n_out}/{n_in} images "
+        f"kept {n_out}/{n_in} {items} "
         f"(hot_buckets_dropped={gate_tel.get('hot_buckets_dropped', 0)}) "
         f"-> {args.output}"
     )
@@ -808,164 +813,6 @@ def cmd_curate_media(args) -> None:
     )
     survivors.write.mode("overwrite").parquet(args.output)
     print(json.dumps(dataclasses.asdict(rep)))
-
-
-def cmd_audio_index(args) -> None:
-    """Build (or refresh) the acoustic-fingerprint index for an audio
-    corpus — the audio analog of `image_index`: decode + fingerprint
-    every payload once, persist (media_id, afp) with the fingerprint
-    revision riding the artifact (`save_afp_index`), 8 B + an id per
-    clip. `audio_filter` probes it without re-reading old PCM."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        audio_fingerprint,
-        load_afp_index,
-        save_afp_index,
-    )
-
-    spark = get_spark(app_name="audio_index")
-    if _fp_index_lifecycle(spark, args):
-        return
-    media = spark.read.parquet(args.input)
-    fps = audio_fingerprint(media, fake_decode=args.fake_decode)
-    save_afp_index(fps, args.output)
-    n = load_afp_index(spark, args.output).count()
-    print(f"indexed {n} clips -> {args.output}")
-
-
-def cmd_audio_filter(args) -> None:
-    """Drop new clips whose fingerprint near-dups anything in an
-    existing afp index (corpus wins), writing the survivors — the
-    audio incremental-ingest gate, mirroring `image_filter`. The
-    fingerprint revision is validated FROM the artifact (cross-revision
-    probes impossible); the batch is fingerprinted exactly once.
-    --append-survivors appends the survivors' fingerprints to the
-    index so the next batch dedups against them too."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        AFP_NBITS,
-        append_afp_index,
-        audio_fingerprint,
-        load_afp_index,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
-        materialize,
-    )
-
-    spark = get_spark(app_name="audio_filter")
-    media = spark.read.parquet(args.input)
-    index = load_afp_index(spark, args.index)
-    # materialize the slim fingerprint frame: it feeds the gate join,
-    # the survivor anti-join, and (optionally) the index append —
-    # without this the mapInPandas decode would re-run per consumer
-    fps = materialize(audio_fingerprint(media, fake_decode=args.fake_decode))
-    gate_tel: dict = {}
-    matched = (
-        hamming_pairs_against_corpus(
-            fps, index,
-            hash_col="afp", id_col="media_id",
-            nbits=AFP_NBITS, max_hamming=args.max_hamming,
-            max_bucket=args.max_bucket or None, telemetry=gate_tel,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
-    )
-    survivors = media.join(matched, "media_id", "left_anti")
-    survivors.write.mode("overwrite").parquet(args.output)
-    n_in = media.count()
-    n_out = spark.read.parquet(args.output).count()
-    if args.append_survivors:
-        n_app = append_afp_index(
-            spark, args.index, fps.join(matched, "media_id", "left_anti")
-        )
-        print(f"appended {n_app} survivor fingerprints -> {args.index}")
-    print(
-        f"kept {n_out}/{n_in} clips "
-        f"(hot_buckets_dropped={gate_tel.get('hot_buckets_dropped', 0)}) "
-        f"-> {args.output}"
-    )
-
-
-def cmd_video_index(args) -> None:
-    """Build (or refresh) the clip-fingerprint index for a video
-    corpus — the video analog of `image_index`: frame-sample +
-    majority-vote-hash every payload once, persist (media_id, vhash)
-    with the full parameter tag riding the artifact
-    (`save_vhash_index`), 8 B + an id per clip."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        load_vhash_index,
-        save_vhash_index,
-        video_phash,
-    )
-
-    spark = get_spark(app_name="video_index")
-    if _fp_index_lifecycle(spark, args):
-        return
-    media = spark.read.parquet(args.input)
-    hashes = video_phash(
-        media, args.algo, args.hash_size, args.n_samples,
-        fake_decode=args.fake_decode,
-    )
-    save_vhash_index(
-        hashes, args.output, args.algo, args.hash_size, args.n_samples
-    )
-    n = load_vhash_index(spark, args.output)[0].count()
-    print(f"indexed {n} videos -> {args.output}")
-
-
-def cmd_video_filter(args) -> None:
-    """Drop new clips whose fingerprint near-dups anything in an
-    existing vhash index (corpus wins), writing the survivors — the
-    video incremental-ingest gate. algo/hash_size/n_samples come FROM
-    the artifact (mismatch impossible); the batch is fingerprinted
-    exactly once. --append-survivors appends the survivors'
-    fingerprints to the index so the next batch dedups against them."""
-    from pyspark.sql import functions as F
-
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        hamming_pairs_against_corpus,
-        materialize,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        append_vhash_index,
-        load_vhash_index,
-        video_phash,
-    )
-
-    spark = get_spark(app_name="video_filter")
-    media = spark.read.parquet(args.input)
-    index, algo, hash_size, n_samples = load_vhash_index(spark, args.index)
-    hashes = materialize(
-        video_phash(
-            media, algo, hash_size, n_samples, fake_decode=args.fake_decode
-        )
-    )
-    gate_tel: dict = {}
-    matched = (
-        hamming_pairs_against_corpus(
-            hashes, index,
-            hash_col="vhash", id_col="media_id",
-            nbits=hash_size * hash_size, max_hamming=args.max_hamming,
-            max_bucket=args.max_bucket or None, telemetry=gate_tel,
-        )
-        .select(F.col("new_id").alias("media_id"))
-        .distinct()
-    )
-    survivors = media.join(matched, "media_id", "left_anti")
-    survivors.write.mode("overwrite").parquet(args.output)
-    n_in = media.count()
-    n_out = spark.read.parquet(args.output).count()
-    if args.append_survivors:
-        n_app = append_vhash_index(
-            spark, args.index, hashes.join(matched, "media_id", "left_anti")
-        )
-        print(f"appended {n_app} survivor fingerprints -> {args.index}")
-    print(
-        f"kept {n_out}/{n_in} videos "
-        f"(hot_buckets_dropped={gate_tel.get('hot_buckets_dropped', 0)}) "
-        f"-> {args.output}"
-    )
 
 
 def cmd_corpus_diff(args) -> None:
@@ -1115,6 +962,10 @@ def cmd_sample(args) -> None:
 
 
 def main() -> None:
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        MEDIA_FP,
+    )
+
     p = argparse.ArgumentParser(prog="run_pipeline")
     sub = p.add_subparsers(dest="cmd", required=True)
 
@@ -1253,38 +1104,42 @@ def main() -> None:
     _add_index_lifecycle_args(pdi)
     pdi.set_defaults(fn=cmd_dedup_index)
 
-    pii_ = sub.add_parser("image_index")
-    pii_.add_argument("--input",
-                      help="media parquet (media_id, payload binary)")
-    pii_.add_argument("--output", required=True,
-                      help="phash index artifact dir")
-    pii_.add_argument("--algo", default="dhash", choices=["dhash", "ahash"])
-    pii_.add_argument("--hash-size", type=int, default=8)
-    pii_.add_argument("--fake-decode", action="store_true",
-                      help="deterministic payload-hash stand-in bits for "
-                      "formats the stdlib codecs cannot decode")
-    _add_index_lifecycle_args(pii_)
-    pii_.set_defaults(fn=cmd_image_index)
+    for kind, fam in MEDIA_FP.items():
+        pmx = sub.add_parser(f"{kind}_index")
+        pmx.add_argument("--input",
+                         help="media parquet (media_id, payload binary)")
+        pmx.add_argument("--output", required=True,
+                         help=f"{fam.hash_col} index artifact dir")
+        for name, default in fam.defaults.items():
+            pmx.add_argument("--" + name.replace("_", "-"), default=default,
+                             **_FP_PARAM_ARGS[name])
+        pmx.add_argument("--fake-decode", action="store_true",
+                         help="deterministic payload-hash stand-in bits for "
+                         "payloads the native decoders cannot handle")
+        _add_index_lifecycle_args(pmx)
+        pmx.set_defaults(fn=cmd_media_index, kind=kind)
 
-    pif_ = sub.add_parser("image_filter")
-    pif_.add_argument("--input", required=True,
-                      help="NEW media parquet (media_id, payload)")
-    pif_.add_argument("--index", required=True,
-                      help="phash index dir from image_index (algo + "
-                      "hash_size come from the artifact)")
-    pif_.add_argument("--output", required=True,
-                      help="survivors parquet out")
-    pif_.add_argument("--max-hamming", type=int, default=3)
-    pif_.add_argument("--max-bucket", type=int, default=1024,
-                       help="hot-bucket membership cap for the banded "
-                       "gate join (0 disables the cap and restores "
-                       "the exact uncapped definition); dropped-bucket"
-                       " counts print with the kept line")
-    pif_.add_argument("--fake-decode", action="store_true")
-    pif_.add_argument("--append-survivors", action="store_true",
-                      help="append the survivors' hashes to --index so "
-                      "the next batch dedups against them too")
-    pif_.set_defaults(fn=cmd_image_filter)
+        pmf = sub.add_parser(f"{kind}_filter")
+        pmf.add_argument("--input", required=True,
+                         help="NEW media parquet (media_id, payload)")
+        pmf.add_argument("--index", required=True,
+                         help=f"{fam.hash_col} index dir from {kind}_index "
+                         "(the fingerprint parameters come from the "
+                         "artifact's tag)")
+        pmf.add_argument("--output", required=True,
+                         help="survivors parquet out")
+        pmf.add_argument("--max-hamming", type=int, default=fam.max_hamming)
+        pmf.add_argument("--max-bucket", type=int, default=1024,
+                         help="hot-bucket membership cap for the banded "
+                         "gate join (0 disables the cap and restores "
+                         "the exact uncapped definition); dropped-bucket"
+                         " counts print with the kept line")
+        pmf.add_argument("--fake-decode", action="store_true")
+        pmf.add_argument("--append-survivors", action="store_true",
+                         help="append the survivors' fingerprints to "
+                         "--index so the next batch dedups against them "
+                         "too")
+        pmf.set_defaults(fn=cmd_media_filter, kind=kind)
 
     ppd = sub.add_parser("pdf_extract")
     ppd.add_argument("--input", required=True,
@@ -1312,72 +1167,6 @@ def main() -> None:
                       "dedups even though its bytes differ")
     pcm_.add_argument("--pdf-near-dup-threshold", type=float, default=0.9)
     pcm_.set_defaults(fn=cmd_curate_media)
-
-    pax = sub.add_parser("audio_index")
-    pax.add_argument("--input",
-                     help="media parquet (media_id, payload binary)")
-    pax.add_argument("--output", required=True,
-                     help="afp index artifact dir")
-    pax.add_argument("--fake-decode", action="store_true",
-                     help="deterministic payload-hash stand-in bits for "
-                     "codecs the native WAV/FLAC decoders cannot handle")
-    _add_index_lifecycle_args(pax)
-    pax.set_defaults(fn=cmd_audio_index)
-
-    paf = sub.add_parser("audio_filter")
-    paf.add_argument("--input", required=True,
-                     help="NEW media parquet (media_id, payload)")
-    paf.add_argument("--index", required=True,
-                     help="afp index dir from audio_index (the fingerprint "
-                     "revision is validated from the artifact)")
-    paf.add_argument("--output", required=True,
-                     help="survivors parquet out")
-    paf.add_argument("--max-hamming", type=int, default=4)
-    paf.add_argument("--max-bucket", type=int, default=1024,
-                       help="hot-bucket membership cap for the banded "
-                       "gate join (0 disables the cap and restores "
-                       "the exact uncapped definition); dropped-bucket"
-                       " counts print with the kept line")
-    paf.add_argument("--fake-decode", action="store_true")
-    paf.add_argument("--append-survivors", action="store_true",
-                     help="append the survivors' fingerprints to --index "
-                     "so the next batch dedups against them too")
-    paf.set_defaults(fn=cmd_audio_filter)
-
-    pvx = sub.add_parser("video_index")
-    pvx.add_argument("--input",
-                     help="media parquet (media_id, payload binary)")
-    pvx.add_argument("--output", required=True,
-                     help="vhash index artifact dir")
-    pvx.add_argument("--algo", default="dhash", choices=["dhash", "ahash"])
-    pvx.add_argument("--hash-size", type=int, default=8)
-    pvx.add_argument("--n-samples", type=int, default=8,
-                     help="frames sampled per clip for the majority vote")
-    pvx.add_argument("--fake-decode", action="store_true",
-                     help="deterministic payload-hash stand-in bits for "
-                     "containers the native extractors cannot handle")
-    _add_index_lifecycle_args(pvx)
-    pvx.set_defaults(fn=cmd_video_index)
-
-    pvf = sub.add_parser("video_filter")
-    pvf.add_argument("--input", required=True,
-                     help="NEW media parquet (media_id, payload)")
-    pvf.add_argument("--index", required=True,
-                     help="vhash index dir from video_index (parameters "
-                     "come from the artifact tag)")
-    pvf.add_argument("--output", required=True,
-                     help="survivors parquet out")
-    pvf.add_argument("--max-hamming", type=int, default=4)
-    pvf.add_argument("--max-bucket", type=int, default=1024,
-                       help="hot-bucket membership cap for the banded "
-                       "gate join (0 disables the cap and restores "
-                       "the exact uncapped definition); dropped-bucket"
-                       " counts print with the kept line")
-    pvf.add_argument("--fake-decode", action="store_true")
-    pvf.add_argument("--append-survivors", action="store_true",
-                     help="append the survivors' fingerprints to --index "
-                     "so the next batch dedups against them too")
-    pvf.set_defaults(fn=cmd_video_filter)
 
     pdf_ = sub.add_parser("dedup_filter")
     pdf_.add_argument("--input", required=True, help="NEW documents parquet")

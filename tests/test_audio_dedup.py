@@ -17,8 +17,9 @@ Pins (the image-tier battery, transposed):
   clips -> tens of bits apart);
 - decode policy: fake stand-in under fake_decode, loud
   NotImplementedError otherwise, NULL payload -> NULL fingerprint;
-- the incremental tier: corpus-wins gate, index artifact round-trip +
-  revision guards, survivors-append, streaming twin == batch.
+- the corpus-wins gate against a persisted afp index (the index
+  artifact, survivors-append, the stream and the CLI are pinned for
+  every family in test_media_fp.py).
 """
 
 from __future__ import annotations
@@ -34,13 +35,13 @@ from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
     AFP_RATE,
     AFP_SEGMENTS,
     _afp_bits,
-    audio_dup_pairs,
     audio_fingerprint,
-    dedup_audio_against_corpus,
-    load_afp_index,
-    save_afp_index,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+    MEDIA_FP,
+    dedup_media_against_corpus,
+    load_media_index,
+    media_dup_pairs,
     save_fp_index,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.flac import encode_flac
@@ -204,7 +205,7 @@ def test_audio_dup_pairs_matches_duckdb_bruteforce(spark):
     fps = audio_fingerprint(media).toPandas()
     got = sorted(
         (r["id_a"], r["id_b"], r["hamming"])
-        for r in audio_dup_pairs(media, max_hamming=4).collect()
+        for r in media_dup_pairs(media, "audio", max_hamming=4).collect()
     )
     con = duckdb.connect()
     con.register("h", fps)
@@ -238,7 +239,7 @@ def test_audio_dup_pairs_planted_recall(spark):
 
     pairs = {
         (r["id_a"], r["id_b"]): r["hamming"]
-        for r in audio_dup_pairs(media, max_hamming=4).collect()
+        for r in media_dup_pairs(media, "audio", max_hamming=4).collect()
     }
     assert set(pairs) == {(0, 1)}
     assert pairs[(0, 1)] == _ham(fps[0], fps[1])
@@ -265,7 +266,7 @@ def test_audio_fingerprint_decode_policy(spark):
     assert again == {k: v["afp"] for k, v in rows.items()}
 
     # NULL-fingerprint rows never reach the pair join
-    pairs = audio_dup_pairs(media, fake_decode=True)
+    pairs = media_dup_pairs(media, "audio", fake_decode=True)
     assert pairs.filter(
         (F.col("id_a") == 2) | (F.col("id_b") == 2)
     ).count() == 0
@@ -286,8 +287,11 @@ def test_dedup_audio_against_corpus(spark, tmp_path):
 
     corpus = _media(spark, [encode_wav(_BASE, 8000), encode_wav(other, 8000)])
     idx_path = str(tmp_path / "afp_index")
-    save_afp_index(audio_fingerprint(corpus), idx_path)
-    index = load_afp_index(spark, idx_path)
+    save_fp_index(
+        audio_fingerprint(corpus), idx_path, MEDIA_FP["audio"].tag({}),
+        hash_col="afp",
+    )
+    index = load_media_index(spark, idx_path, "audio")[0]
 
     new_payloads = [
         encode_flac(_BASE, 8000),  # 100: same PCM, different codec -> dup
@@ -298,9 +302,9 @@ def test_dedup_audio_against_corpus(spark, tmp_path):
     new_media = _media(spark, new_payloads, ids=[100, 101, 102, 103])
     kept = sorted(
         r["media_id"]
-        for r in dedup_audio_against_corpus(
-            new_media, index, max_hamming=4
-        ).collect()
+        for r in dedup_media_against_corpus(
+            spark, new_media, idx_path, max_hamming=4
+        )[0].collect()
     )
     assert kept == [102, 103]
 
@@ -330,160 +334,3 @@ def test_dedup_audio_against_corpus(spark, tmp_path):
         )
     )
     assert got == want and len(got) == 2
-
-
-def test_afp_index_save_load_roundtrip_and_guards(spark, tmp_path):
-    """The afp artifact discipline (save_phash_index pattern): the
-    revision tag rides the manifest and is validated on load; NULL
-    id/fingerprint rows drop at save; an EMPTY index round-trips its
-    tag; a root without a manifest, a foreign-revision artifact and
-    column-less frames fail loudly."""
-    media = _media(
-        spark,
-        [encode_wav(_BASE, 8000), encode_wav(_tone([(700, 5000)]), 8000), None],
-    )
-    fps = audio_fingerprint(media, fake_decode=True)
-    path = str(tmp_path / "afpidx")
-    save_afp_index(fps, path)
-
-    idx = load_afp_index(spark, path)
-    assert sorted(idx.columns) == ["afp", "media_id"]
-    got = {r["media_id"]: r["afp"] for r in idx.collect()}
-    want = {
-        r["media_id"]: r["afp"]
-        for r in fps.collect()
-        if r["afp"] is not None
-    }
-    assert got == want and len(got) == 2  # NULL-fingerprint row dropped
-
-    # empty index: the tag survives the round-trip in the manifest
-    empty = str(tmp_path / "empty")
-    save_afp_index(fps.filter("media_id < 0"), empty)
-    assert load_afp_index(spark, empty).count() == 0
-
-    # guards
-    with pytest.raises(ValueError, match="lacks column"):
-        save_afp_index(fps.drop("afp"), str(tmp_path / "x1"))
-    plain = str(tmp_path / "plain")
-    fps.select("media_id", "afp").write.parquet(plain)
-    with pytest.raises(ValueError, match="not a committed artifact"):
-        load_afp_index(spark, plain)
-    foreign = str(tmp_path / "foreign")
-    save_fp_index(
-        fps, foreign, "hk-lag-v0:4000:8:1,2",
-        id_col="media_id", hash_col="afp",
-    )
-    with pytest.raises(ValueError, match="revision"):
-        load_afp_index(spark, foreign)
-
-
-def test_afp_index_append_feeds_corpus_gate(spark, tmp_path):
-    """Survivors-append flow: gate a batch, append the survivors'
-    fingerprints (append_afp_index validates the artifact first), and
-    the SAME batch re-gated against the grown index drops entirely —
-    the next crawl day never re-ingests today's survivors."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        append_afp_index,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
-        materialize,
-    )
-
-    corpus = _media(spark, [encode_wav(_BASE, 8000)])
-    path = str(tmp_path / "idx")
-    save_afp_index(audio_fingerprint(corpus), path)
-
-    far = _tone([(300, 3800), (900, 2400)])
-    batch = _media(
-        spark,
-        [encode_wav(_noisy(_BASE, 20, seed=3), 8000), encode_wav(far, 8000)],
-        ids=[10, 11],
-    )
-    index = load_afp_index(spark, path)
-    survivors = dedup_audio_against_corpus(batch, index, max_hamming=4)
-    assert [r["media_id"] for r in survivors.collect()] == [11]
-
-    fps = materialize(audio_fingerprint(batch))
-    surv_fps = fps.join(
-        survivors.select("media_id"), "media_id", "left_semi"
-    )
-    assert append_afp_index(spark, path, surv_fps) == 1
-
-    regate = dedup_audio_against_corpus(
-        batch, load_afp_index(spark, path), max_hamming=4
-    )
-    assert regate.count() == 0
-    # appending nothing is a no-op, not a corrupt artifact
-    assert append_afp_index(spark, path, fps.filter("media_id < 0")) == 0
-    assert load_afp_index(spark, path).count() == 2
-
-
-def test_stream_audio_dedup_ingest(spark, tmp_path):
-    """Streaming twin == batch gate: clips land as files, each is
-    decoded+fingerprinted once, corpus near-dups drop, survivors'
-    fingerprints land in the sink; a second wave processes ONLY the
-    new files (checkpointed exactly-once) and the verdicts match the
-    batch operator's."""
-    import os
-
-    from hospital_stain_tracker_data_pipeline_spark.streaming.ingest_stream import (
-        stream_audio_dedup_ingest,
-    )
-
-    near = _noisy(_BASE, 20, seed=3)
-    far = _tone([(300, 3800), (900, 2400)])
-    other = _tone([(500, 4200), (1500, 2100)])
-
-    corpus = _media(spark, [encode_wav(_BASE, 8000)])
-    index = audio_fingerprint(corpus).select("media_id", "afp")
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    sink = str(tmp_path / "sink")
-    (land / "dup.flac").write_bytes(encode_flac(_BASE, 8000))  # cross-codec
-    (land / "near.wav").write_bytes(encode_wav(near, 8000))
-    (land / "keep.wav").write_bytes(encode_wav(far, 8000))
-
-    out1 = stream_audio_dedup_ingest(
-        spark, str(land), index, sink, max_hamming=4
-    )
-    kept1 = {os.path.basename(r["path"]) for r in out1.collect()}
-    assert kept1 == {"keep.wav"}
-    [row] = out1.collect()
-    assert row["decoded"] is True and row["mime"] == "audio/wav"
-
-    # second wave: one fresh clip + one more corpus dup — the
-    # checkpoint processes only the new files; earlier sink rows stay
-    (land / "wave2_keep.wav").write_bytes(encode_wav(other, 8000))
-    (land / "wave2_dup.wav").write_bytes(encode_wav(_BASE, 8000))
-    out2 = stream_audio_dedup_ingest(
-        spark, str(land), index, sink, max_hamming=4
-    )
-    kept2 = {os.path.basename(r["path"]) for r in out2.collect()}
-    assert kept2 == {"keep.wav", "wave2_keep.wav"}
-
-    # stream verdicts == batch operator verdicts over the same payloads
-    all_payloads = [
-        encode_flac(_BASE, 8000),
-        encode_wav(near, 8000),
-        encode_wav(far, 8000),
-        encode_wav(other, 8000),
-        encode_wav(_BASE, 8000),
-    ]
-    batch_kept = dedup_audio_against_corpus(
-        _media(spark, all_payloads), index, max_hamming=4
-    )
-    assert batch_kept.count() == 2
-    stream_fps = {r["afp"] for r in out2.collect()}
-    batch_fps = {
-        r["afp"] for r in audio_fingerprint(batch_kept).collect()
-    }
-    assert stream_fps == batch_fps
-
-    # survivors' fingerprints append straight onto the index: the grown
-    # index drops everything already ingested
-    grown = index.unionByName(out2.select("media_id", "afp"))
-    regate = dedup_audio_against_corpus(
-        _media(spark, all_payloads), grown, max_hamming=4
-    )
-    assert regate.count() == 0

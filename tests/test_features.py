@@ -131,3 +131,31 @@ def test_text_probe_end_to_end(spark):
         and (r["score"] >= 0.5) == (r["label"] == 1.0)
     )
     assert correct >= 114  # ≥95% of 120
+
+
+def test_text_probe_artifact_through_file_uri(spark, tmp_path):
+    """The probe artifact goes through the Hadoop FileSystem API: a
+    ``file://`` URI saves, loads and passes ``index_fsck`` (the CLI's
+    --save-probe/--probe-weights take the same paths), and a save
+    creates missing parent dirs; a plain path keeps working."""
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        index_fsck,
+    )
+    from hospital_stain_tracker_data_pipeline_spark.operators.features import (
+        load_text_probe,
+        save_text_probe,
+    )
+
+    for path in (
+        f"file://{tmp_path}/nested/probe.json",
+        str(tmp_path / "plain.json"),
+    ):
+        save_text_probe(path, [0.5, -0.25, 0.125], 0.1, 3)
+        w, bias, dim = load_text_probe(path)
+        assert w.tolist() == [0.5, -0.25, 0.125] and (bias, dim) == (0.1, 3)
+        rep = index_fsck(spark, path)
+        assert rep["ok"], rep
+        assert rep["kind"] == "text_probe" and rep["rows"] == 3
+    # a save replaces the previous artifact wholesale
+    save_text_probe(path, [1.0], -0.5, 1)
+    assert load_text_probe(path)[1:] == (-0.5, 1)

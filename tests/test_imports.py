@@ -45,14 +45,12 @@ def test_operator_surface_exports():
         "tokenizer_efficiency", "tune_lsh_bands",
         "extract_image_features", "extract_audio_features",
         "extract_video_features", "sample_video_frames",
-        "audio_fingerprint", "audio_dup_pairs",
-        "dedup_audio_against_corpus", "save_afp_index",
-        "load_afp_index", "append_afp_index",
-        "video_phash", "video_dup_pairs", "dedup_videos_against_corpus",
-        "save_vhash_index", "load_vhash_index", "append_vhash_index",
+        "image_phash", "audio_fingerprint", "video_phash",
+        "media_dup_pairs", "dedup_media_against_corpus",
+        "load_media_index", "MediaFamily",
         "save_fp_index", "load_fp_index", "append_fp_index",
         "remove_from_index", "compact_index",
-        "classify_media", "sniff_pdf", "extract_pdf_text",
+        "tag_media_modality", "sniff_pdf", "extract_pdf_text",
         "build_simple_pdf",
     ):
         assert callable(getattr(o, name)), name

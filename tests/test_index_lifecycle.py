@@ -1,7 +1,8 @@
 """Deletion lifecycle and commit protocol for the persisted indexes.
 
-Every index kind — ANN, text MinHash, image phash, audio afp, video
-vhash — commits through the versioned manifest in `artifacts.py` and
+Every index kind — ANN, text MinHash and the tagged fingerprint
+families (image phash, audio afp, video vhash) — commits through the
+versioned manifest in `artifacts.py` and
 shares one tombstone engine (`remove_from_index` / `compact_index`):
 
 - remove-then-probe == probe-against-rebuilt-without-ids, per tier;
@@ -232,67 +233,90 @@ def _ids2(spark, ids):
 
 
 def test_phash_remove_and_compact(spark, tmp_path):
-    """Image tier: the phash artifact (its own two-parameter format)
-    rides the same lifecycle engine."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        load_phash_index,
-        save_phash_index,
+    """Image tier: the phash index is a tagged fingerprint artifact
+    (its parameters in the tag) and rides the same lifecycle engine;
+    an artifact of the retired "phash" manifest kind fails with the
+    kind error (rebuild it)."""
+    from hospital_stain_tracker_data_pipeline_spark.artifacts import (
+        write_new,
+    )
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        MEDIA_FP,
+        load_media_index,
     )
 
     hashes = spark.createDataFrame(
         [(1, 11), (2, 22), (3, 33)], "media_id long, phash long"
     )
     path = str(tmp_path / "ph")
-    save_phash_index(hashes, "dhash", 8, path)
+    fam = MEDIA_FP["image"]
+    save_fp_index(hashes, path, fam.tag(fam.params()), hash_col="phash")
     rep = remove_from_index(spark, path, _ids(spark, [2]))
     assert rep["tombstones_total"] == 1
-    idx, algo, hs = load_phash_index(spark, path)
-    assert (algo, hs) == ("dhash", 8)
+    idx, _, params = load_media_index(spark, path, "image")
+    assert params == {"algo": "dhash", "hash_size": 8}
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 3]
     rep = compact_index(spark, path, force=True)
     assert rep["compacted"] is True
-    idx, _, _ = load_phash_index(spark, path)
+    idx, _, _ = load_media_index(spark, path, "image")
     assert sorted(r["media_id"] for r in idx.collect()) == [1, 3]
+
+    old = str(tmp_path / "old")
+    write_new(
+        spark, old, "phash",
+        {"algo": "dhash", "hash_size": 8, "id_col": "media_id",
+         "hash_col": "phash"},
+        {"data": hashes},
+    )
+    for fn in (
+        lambda: load_media_index(spark, old),
+        lambda: remove_from_index(spark, old, _ids(spark, [1])),
+    ):
+        with pytest.raises(ValueError, match="'phash' artifact, not"):
+            fn()
 
 
 def test_audio_video_tiers_share_the_lifecycle(spark, tmp_path):
     """Audio/video tiers: their artifacts ride the generic lifecycle
     under the manifest's id column, and a video artifact never loads
     as an audio index (wrong family)."""
-    from hospital_stain_tracker_data_pipeline_spark.operators.audio_fp import (
-        load_afp_index,
-        save_afp_index,
+    from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        MEDIA_FP,
+        load_media_index,
     )
-    from hospital_stain_tracker_data_pipeline_spark.operators.video_fp import (
-        load_vhash_index,
-        save_vhash_index,
-    )
+
+    def ids(path, kind):
+        return [
+            r["media_id"] for r in load_media_index(spark, path, kind)[0]
+            .collect()
+        ]
 
     fps = spark.createDataFrame(
         [(1, 111), (2, 222)], "media_id long, afp long"
     )
     apath = str(tmp_path / "afp")
-    save_afp_index(fps, apath)
+    save_fp_index(fps, apath, MEDIA_FP["audio"].tag({}), hash_col="afp")
     rep = remove_from_index(spark, apath, _ids(spark, [1]))
     assert rep["tombstones_total"] == 1
-    assert [r["media_id"] for r in load_afp_index(spark, apath).collect()] == [2]
+    assert ids(apath, "audio") == [2]
     assert compact_index(spark, apath, force=True)["compacted"] is True
-    assert [r["media_id"] for r in load_afp_index(spark, apath).collect()] == [2]
+    assert ids(apath, "audio") == [2]
 
     vpath = str(tmp_path / "vh")
     vh = spark.createDataFrame(
         [(1, 11), (2, 22)], "media_id long, vhash long"
     )
-    save_vhash_index(vh, vpath, "dhash", 4, 3)
+    vfam = MEDIA_FP["video"]
+    params = vfam.params(hash_size=4, n_samples=3)
+    save_fp_index(vh, vpath, vfam.tag(params), hash_col="vhash")
     with pytest.raises(ValueError, match="tag"):
-        load_afp_index(spark, vpath)
+        load_media_index(spark, vpath, "audio")
     rep = remove_from_index(spark, vpath, _ids(spark, [2]))
     assert rep["tombstones_total"] == 1
-    idx, algo, hs, ns = load_vhash_index(spark, vpath)
-    assert (algo, hs, ns) == ("dhash", 4, 3)
-    assert [r["media_id"] for r in idx.collect()] == [1]
+    assert load_media_index(spark, vpath)[2] == params
+    assert ids(vpath, "video") == [1]
     assert compact_index(spark, vpath, force=True)["compacted"] is True
-    assert [r["media_id"] for r in load_vhash_index(spark, vpath)[0].collect()] == [1]
+    assert ids(vpath, "video") == [1]
 
 
 def test_cli_index_remove_and_compact(tmp_path):
@@ -416,10 +440,8 @@ def test_index_fsck_all_kinds(spark, tmp_path):
     reports lifecycle state read-only, and reports (never raises) on
     broken artifacts — the fleet-sweep contract."""
     from hospital_stain_tracker_data_pipeline_spark.operators.dedup import (
+        MEDIA_FP,
         index_fsck,
-    )
-    from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-        save_phash_index,
     )
     from hospital_stain_tracker_data_pipeline_spark.operators.pq import (
         build_ann_index,
@@ -446,15 +468,16 @@ def test_index_fsck_all_kinds(spark, tmp_path):
     assert rep["meta"] == {"num_hashes": 32, "k": 3}
     assert rep["rows"] == 2 and rep["tombstones"] == 0
 
-    # phash artifact
+    # image phash artifact: a tagged fingerprint index like the others
     ph = str(tmp_path / "ph")
-    save_phash_index(
+    fam = MEDIA_FP["image"]
+    save_fp_index(
         spark.createDataFrame([(1, 11)], "media_id long, phash long"),
-        "dhash", 8, ph,
+        ph, fam.tag(fam.params()), hash_col="phash",
     )
     rep = index_fsck(spark, ph)
-    assert rep["ok"] and rep["kind"] == "phash"
-    assert rep["meta"] == {"algo": "dhash", "hash_size": 8}
+    assert rep["ok"] and rep["kind"] == "fp_tagged"
+    assert rep["meta"] == {"tag": "phash-v1:dhash:8"}
 
     # ANN artifact with a tombstone
     emb = spark.createDataFrame(
@@ -574,10 +597,7 @@ def test_index_fsck_covers_every_save_writer(spark, tmp_path):
         writers |= set(re.findall(r"^def (save_\w+)", open(f).read(), re.M))
     expected_kind = {
         "save_dedup_index": "minhash",
-        "save_fp_index": "fp_tagged",
-        "save_afp_index": "fp_tagged",     # wraps save_fp_index
-        "save_vhash_index": "fp_tagged",   # wraps save_fp_index
-        "save_phash_index": "phash",
+        "save_fp_index": "fp_tagged",  # every MEDIA_FP family
         "save_ivf_index": "ivf_centroids",
         "save_pq_index": "pq_codebooks",
         "save_cms_sketch": "cms_sketch",

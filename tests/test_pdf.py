@@ -11,7 +11,7 @@ Pins:
 - policy: encrypted PDFs refuse extraction (sniff flags them),
   non-PDFs yield NULL rows, fake_decode gives the deterministic
   stand-in, no-fake raises loudly;
-- classify_media routes PDFs as document modality with
+- tag_media_modality routes PDFs as document modality with
   native == not encrypted;
 - the extracted frame joins the ordinary document pipeline (a
   quality-signal pass runs on it unchanged).
@@ -25,7 +25,7 @@ import pandas as pd
 import pytest
 
 from hospital_stain_tracker_data_pipeline_spark.operators.multimodal import (
-    classify_media,
+    tag_media_modality,
     to_media_table,
 )
 from hospital_stain_tracker_data_pipeline_spark.operators.pdf import (
@@ -241,11 +241,11 @@ def test_classify_media_routes_pdfs(spark):
         ],
     )
     got = {
-        r["media_id"]: (r["modality"], r["mime"], r["native"])
-        for r in classify_media(media).collect()
+        r["media_id"]: (r["modality"], r["native"])
+        for r in tag_media_modality(media).collect()
     }
-    assert got[0] == ("document", "application/pdf", True)
-    assert got[1] == ("document", "application/pdf", False)
+    assert got[0] == ("document", True)
+    assert got[1] == ("document", False)
 
 
 def test_pdf_text_joins_document_pipeline(spark):
